@@ -1,5 +1,7 @@
 package graft.superstore
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession, Column}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -23,6 +25,13 @@ import org.apache.spark.sql.types._
   * Surrogate-key windows are single-partition but bounded by dimension
   * cardinality (≤ thousands) — fact tables never need global sequencing, so
   * the design holds at any fact-table scale (SURVEY.md §7.3).
+  *
+  * Every dimension (and every internal id map and fact lookup) is
+  * computed when its function is called and returned as driver-local
+  * rows, under the same cardinality bound every `broadcast()` join here
+  * already assumes; [[build]] calls each function once.
+  * Facts stay lazy and distributed and join those rows, so no fact ever
+  * re-derives a dimension from `pre`.
   */
 object SuperstoreETL {
 
@@ -113,6 +122,14 @@ object SuperstoreETL {
 
   // ------------------------------------------------------------- dimensions
 
+  /** A computed dimension as a driver-local relation (`LocalRelation`):
+    * plans that join it read its rows, not the lineage that derived them.
+    * Catalyst plans each action independently, so a lazy dimension would be
+    * recomputed by every table that uses it. Every dimension function below
+    * returns its tables (and builds its id maps) through this. */
+  private def local(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(df.collect().toSeq.asJava, df.schema)
+
   /** Calendar + CalendarMonth (etl.py:163-251): sorted union of the two
     * date roles; year_id = rank of year; calendar_month_id chronological. */
   def calendarDims(pre: DataFrame): (DataFrame, DataFrame) = {
@@ -126,7 +143,7 @@ object SuperstoreETL {
       .withColumn("month_name", date_format(col("full_date"), "MMMM"))
       .withColumn("day_number", dayofmonth(col("full_date")))
       .withColumn("day_id", dayofmonth(col("full_date")))
-    val calendarMonth = withYear
+    val calendarMonth = local(withYear
       .select("year_id", "year_number", "month_number", "month_name")
       .distinct()
       .withColumn("calendar_month_id",
@@ -134,43 +151,43 @@ object SuperstoreETL {
       .select(col("calendar_month_id"),
               col("month_number").as("calendar_month_number"),
               col("month_name").as("calendar_month_name"),
-              col("year_id"), col("year_number"))
-    val calendar = withYear
+              col("year_id"), col("year_number")))
+    val calendar = local(withYear
       .withColumn("calendar_id",
         row_number().over(Window.orderBy("full_date")).cast(IntegerType))
       .join(calendarMonth.select(col("calendar_month_id").as("month_id"),
               col("year_id"), col("calendar_month_number").as("month_number")),
             Seq("year_id", "month_number"))
       .select("calendar_id", "full_date", "year_id", "year_number",
-              "month_id", "month_number", "month_name", "day_id", "day_number")
+              "month_id", "month_number", "month_name", "day_id", "day_number"))
     (calendar, calendarMonth)
   }
 
   def customerDim(pre: DataFrame): DataFrame =
-    firstAppearance(pre, "customer_id",
+    local(firstAppearance(pre, "customer_id",
       Seq("Customer ID", "Customer Name", "Segment"))
       .select(col("customer_id"), col("Customer ID").as("customer_code"),
-              col("Customer Name").as("customer_name"), col("Segment").as("segment"))
+              col("Customer Name").as("customer_name"), col("Segment").as("segment")))
 
   /** Country/city level ids come from their own first-appearance mappings
     * (etl.py:137-159), not from the owning dimension's key order. */
   def geographyDims(pre: DataFrame): (DataFrame, DataFrame, DataFrame) = {
-    val countryIds = firstAppearance(pre, "country_id", Seq("Country"))
-    val cityIds = firstAppearance(pre, "city_id", Seq("City", "State"))
+    val countryIds = local(firstAppearance(pre, "country_id", Seq("Country")))
+    val cityIds = local(firstAppearance(pre, "city_id", Seq("City", "State")))
 
-    val region = firstAppearance(pre, "region_id", Seq("Region", "Country"))
+    val region = local(firstAppearance(pre, "region_id", Seq("Region", "Country"))
       .join(broadcast(countryIds), "Country")
       .select(col("region_id"), col("Region").as("region_name"),
-              col("country_id"), col("Country").as("country_name"))
+              col("country_id"), col("Country").as("country_name")))
 
-    val state = firstAppearance(pre, "state_id", Seq("State", "Region", "Country"))
+    val state = local(firstAppearance(pre, "state_id", Seq("State", "Region", "Country"))
       .join(broadcast(region.select(col("region_name").as("Region"), col("region_id"))), "Region")
       .join(broadcast(countryIds), "Country")
       .select(col("state_id"), col("State").as("state_name"),
               col("region_id"), col("Region").as("region_name"),
-              col("country_id"), col("Country").as("country_name"))
+              col("country_id"), col("Country").as("country_name")))
 
-    val location = firstAppearance(pre, "location_id",
+    val location = local(firstAppearance(pre, "location_id",
         Seq("Postal Code", "City", "State", "Country", "Region"))
       .join(broadcast(state.select(col("state_name").as("State"), col("state_id"))), "State")
       .join(broadcast(region.select(col("region_name").as("Region"), col("region_id"))), "Region")
@@ -181,26 +198,26 @@ object SuperstoreETL {
               col("state_id"), col("State").as("state_name"),
               col("city_id"), col("City").as("city_name"),
               col("Postal Code").as("postal_code"),
-              col("region_id"), col("Region").as("region_name"))
+              col("region_id"), col("Region").as("region_name")))
     (region, state, location)
   }
 
   def shippingDim(pre: DataFrame): DataFrame =
-    firstAppearance(pre, "shipping_id", Seq("Ship Mode"))
-      .select(col("shipping_id"), col("Ship Mode").as("ship_mode"))
+    local(firstAppearance(pre, "shipping_id", Seq("Ship Mode"))
+      .select(col("shipping_id"), col("Ship Mode").as("ship_mode")))
 
   def productDims(pre: DataFrame): (DataFrame, DataFrame) = {
-    val category = firstAppearance(pre, "category_id", Seq("Category"))
-      .select(col("category_id"), col("Category").as("category_name"))
-    val subCatIds = firstAppearance(pre, "sub_category_id", Seq("Sub-Category"))
-    val product = firstAppearance(pre, "product_id",
+    val category = local(firstAppearance(pre, "category_id", Seq("Category"))
+      .select(col("category_id"), col("Category").as("category_name")))
+    val subCatIds = local(firstAppearance(pre, "sub_category_id", Seq("Sub-Category")))
+    val product = local(firstAppearance(pre, "product_id",
         Seq("Product ID", "Product Name", "Category", "Sub-Category"))
       .join(broadcast(category.select(col("category_name").as("Category"), col("category_id"))), "Category")
       .join(broadcast(subCatIds), "Sub-Category")
       .select(col("product_id"), col("Product ID").as("product_code"),
               col("Product Name").as("product_name"),
               col("category_id"), col("Category").as("category_name"),
-              col("sub_category_id"), col("Sub-Category").as("sub_category_name"))
+              col("sub_category_id"), col("Sub-Category").as("sub_category_name")))
     (category, product)
   }
 
@@ -265,23 +282,24 @@ object SuperstoreETL {
     * key (etl.py:452-471): duplicated natural keys OVERWRITE, so the
     * last-inserted (= highest) surrogate id wins — product_code maps 1,894
     * rows onto 1,862 codes. A plain join would fan out; this lookup
-    * replicates the dict. */
+    * replicates the dict. [[build]] computes each lookup once and hands it
+    * to every fact that resolves through it. */
   private def lastWins(dim: DataFrame, id: String, keys: String*): DataFrame =
-    dim.groupBy(keys.map(c => col(s"`$c`")): _*).agg(max(col(id)).as(id))
+    local(dim.groupBy(keys.map(c => col(s"`$c`")): _*).agg(max(col(id)).as(id)))
 
   /** Item fact (etl.py:444-556): one row per processed order-item; inner
     * broadcast joins replace the dict lookups (misses would be rejects —
-    * none occur on the reference data, asserted in the spec). */
-  def itemFact(pre: DataFrame, customer: DataFrame, product: DataFrame,
-               calendar: DataFrame, location: DataFrame): DataFrame =
+    * none occur on the reference data, asserted in the spec). The
+    * `…ByCode`/`locationByKey` arguments are [[lastWins]] lookups. */
+  def itemFact(pre: DataFrame, customerByCode: DataFrame,
+               productByCode: DataFrame, calendar: DataFrame,
+               locationByKey: DataFrame): DataFrame =
     pre
-      .join(broadcast(lastWins(customer, "customer_id", "customer_code")),
-            pre("Customer ID") === col("customer_code"))
-      .join(broadcast(lastWins(product, "product_id", "product_code")),
-            pre("Product ID") === col("product_code"))
+      .join(broadcast(customerByCode), pre("Customer ID") === col("customer_code"))
+      .join(broadcast(productByCode), pre("Product ID") === col("product_code"))
       .join(broadcast(calendar.select(col("calendar_id"), col("full_date"))),
             pre("Order Date") === col("full_date"))
-      .join(broadcast(lastWins(location, "location_id", "postal_code", "city_name")),
+      .join(broadcast(locationByKey),
             pre("Postal Code") === col("postal_code") && pre("City") === col("city_name"))
       .select(col("customer_id"), col("location_id"), col("calendar_id"),
               col("product_id"), col("Order ID").as("order_code"),
@@ -293,8 +311,9 @@ object SuperstoreETL {
   /** Orders fact (etl.py:557-681): per-order rollup; order-level attributes
     * from the first row (min pos), measures summed, two role-playing
     * calendar keys. */
-  def ordersFact(pre: DataFrame, customer: DataFrame, calendar: DataFrame,
-                 location: DataFrame, shipping: DataFrame): DataFrame = {
+  def ordersFact(pre: DataFrame, customerByCode: DataFrame,
+                 calendar: DataFrame, locationByKey: DataFrame,
+                 shipping: DataFrame): DataFrame = {
     val firstCols = Seq("Order Date", "Ship Date", "Customer ID",
       "Postal Code", "City", "Ship Mode")
     val rolled = pre.groupBy(col("Order ID").as("order_code"))
@@ -318,9 +337,8 @@ object SuperstoreETL {
     rolled
       .join(broadcast(oc), col("od") === col("ocd"))
       .join(broadcast(sc), col("sd") === col("scd"))
-      .join(broadcast(lastWins(customer, "customer_id", "customer_code")),
-            col("cc") === col("customer_code"))
-      .join(broadcast(lastWins(location, "location_id", "postal_code", "city_name")),
+      .join(broadcast(customerByCode), col("cc") === col("customer_code"))
+      .join(broadcast(locationByKey),
             col("pc") === col("postal_code") && col("ct") === col("city_name"))
       .join(broadcast(shipping), col("sm") === shipping("ship_mode"))
       .select(col("order_calendar_id"), col("shipping_calendar_id"),
@@ -404,16 +422,21 @@ object SuperstoreETL {
   // ------------------------------------------------------------ orchestrate
 
   /** Full warehouse build: CSV → 15 named tables (SURVEY.md §1.5 gives the
-    * expected cardinalities on the reference CSV). */
+    * expected cardinalities on the reference CSV). The 9 dimensions, their
+    * id maps and the fact lookups are computed here, once each, and
+    * returned as driver-local relations; the 6 facts are returned lazy. */
   def build(spark: SparkSession, csvPath: String): Map[String, DataFrame] = {
     val pre = preprocess(readRaw(spark, csvPath)).cache()
     val (calendar, calendarMonth) = calendarDims(pre)
     val customer = customerDim(pre)
+    val customerByCode = lastWins(customer, "customer_id", "customer_code")
     val (region, state, location) = geographyDims(pre)
+    val locationByKey = lastWins(location, "location_id", "postal_code", "city_name")
     val shipping = shippingDim(pre)
     val (category, product) = productDims(pre)
-    val item = itemFact(pre, customer, product, calendar, location)
-    val orders = ordersFact(pre, customer, calendar, location, shipping)
+    val productByCode = lastWins(product, "product_id", "product_code")
+    val item = itemFact(pre, customerByCode, productByCode, calendar, locationByKey)
+    val orders = ordersFact(pre, customerByCode, calendar, locationByKey, shipping)
     val orderM = orderMFact(pre, calendarMonth, state)
     val productPerformance = productPerformanceFact(pre, category, state, calendarMonth)
     val (shippingBehavior, shippingBehaviorS) =

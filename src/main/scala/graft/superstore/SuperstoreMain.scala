@@ -22,10 +22,9 @@ object SuperstoreMain {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val wh = SuperstoreETL.build(spark, csvPath)
-    wh.foreach { case (name, df) =>
-      df.write.mode("overwrite").parquet(s"$outDir/$name")
-      println(s"WAREHOUSE $name rows=${spark.read.parquet(s"$outDir/$name").count()}")
+    val wh = WarehouseCache.write(SuperstoreETL.build(spark, csvPath), outDir)
+    WarehouseCache.tableNames.foreach { name =>
+      println(s"WAREHOUSE $name rows=${wh(name).count()}")
     }
 
     Queries13.registerViews(wh)

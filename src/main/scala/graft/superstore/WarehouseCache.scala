@@ -35,10 +35,17 @@ object WarehouseCache {
 
   def get(spark: SparkSession): Map[String, DataFrame] =
     cache.computeIfAbsent((spark, dir), { case (s, d) =>
-      val built = SuperstoreETL.build(s, CsvPath)
-      tableNames.foreach { t =>
-        built(t).coalesce(1).write.mode("overwrite").parquet(s"$d/$t")
-      }
-      tableNames.map(t => t -> s.read.parquet(s"$d/$t")).toMap
+      write(SuperstoreETL.build(s, CsvPath), d)
     })
+
+  /** Writes each of the 15 tables of a built warehouse to `dir/<table>` as
+    * one parquet file and returns plain parquet scans over what was
+    * written, so queries plan against the files, not the ETL lineage. */
+  def write(built: Map[String, DataFrame], dir: String): Map[String, DataFrame] = {
+    tableNames.foreach { t =>
+      built(t).coalesce(1).write.mode("overwrite").parquet(s"$dir/$t")
+    }
+    val spark = built(tableNames.head).sparkSession
+    tableNames.map(t => t -> spark.read.parquet(s"$dir/$t")).toMap
+  }
 }

@@ -4,12 +4,12 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 
-import graft.superstore.{SuperstoreETL, Exporter}
+import graft.superstore.{Exporter, SuperstoreETL, WarehouseCache}
 
 class ExporterSpec extends AnyFunSuite {
   import TestSpark.spark
 
-  private val csv = "/root/reference/Sample - Superstore.csv"
+  private val csv = WarehouseCache.CsvPath
 
   test("csv export round-trips a dimension table") {
     val wh = SuperstoreETL.build(spark, csv)

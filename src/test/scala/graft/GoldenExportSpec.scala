@@ -6,7 +6,7 @@ import java.time.temporal.ChronoUnit
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.superstore.SuperstoreETL
+import graft.superstore.{SuperstoreETL, WarehouseCache}
 
 /** Value-level golden parity against the reference's de-facto ground truth:
   * `superstore_dw_export.xlsx` (written by the reference's
@@ -21,7 +21,7 @@ import graft.superstore.SuperstoreETL
 class GoldenExportSpec extends AnyFunSuite {
   import TestSpark.spark
 
-  private val csv = "/root/reference/Sample - Superstore.csv"
+  private val csv = WarehouseCache.CsvPath
   private lazy val wh = SuperstoreETL.build(spark, csv)
   private val goldenDir = "src/test/resources/golden"
   private val excelEpoch = LocalDate.of(1899, 12, 30)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.{BucketedLayout, HilbertLayout, StatsManifest, ZOrderLayout}
-import graft.superstore.{Exporter, SuperstoreETL}
+import graft.superstore.{Exporter, SuperstoreETL, WarehouseCache}
 
 /** The unified maintenance tick (round 16, VERDICT r15 #4): one verb
   * walks every registered family and applies its policy — absent layouts
@@ -41,7 +41,7 @@ class MaintenanceSpec extends AnyFunSuite {
     BucketedLayout.ensureTable(spark, src, "lineitem", "l_orderkey")
     ZOrderLayout.ensureLineitem(spark, src)
     HilbertLayout.ensureLineitem3(spark, src)
-    val csv = "/root/reference/Sample - Superstore.csv"
+    val csv = WarehouseCache.CsvPath
     val wh = SuperstoreETL.build(spark, csv)
     val (item, cal) = (wh("Item"), wh("Calendar"))
     val itemDir = s"$root/itemwh"

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.superstore.{SuperstoreETL, Queries13}
+import graft.superstore.{Queries13, SuperstoreETL, WarehouseCache}
 
 /** The 13-query workload: DataFrame program vs Spark SQL twin must agree
   * row-for-row on the golden warehouse, plus semantic spot checks. */
@@ -11,7 +11,7 @@ class Queries13Spec extends AnyFunSuite {
   import TestSpark.spark
 
   private lazy val wh: Map[String, org.apache.spark.sql.DataFrame] = {
-    val w = SuperstoreETL.build(spark, "/root/reference/Sample - Superstore.csv")
+    val w = SuperstoreETL.build(spark, WarehouseCache.CsvPath)
       .map { case (k, v) => k -> v.cache() }
     Queries13.registerViews(w)
     w

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.superstore.SuperstoreETL
+import graft.superstore.{SuperstoreETL, WarehouseCache}
 
 /** Batch-republish id-stability: the reference's surrogate ids are
   * order-coupled GLOBALLY (calendar_id = row_number over sorted dates,
@@ -23,7 +23,7 @@ import graft.superstore.SuperstoreETL
 class RepublishSpec extends AnyFunSuite {
   import TestSpark.spark
 
-  private val src = "/root/reference/Sample - Superstore.csv"
+  private val src = WarehouseCache.CsvPath
 
   /** Copy of the source CSV with `rows` appended (windows-1252, CRLF —
     * the source file's own conventions). */

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.superstore.SuperstoreETL
+import graft.superstore.{SuperstoreETL, WarehouseCache}
 
 /** Golden ETL test (SURVEY.md §5): run the full warehouse build on the
   * reference's own CSV and assert the §1.5 ground-truth cardinalities from
@@ -11,7 +11,7 @@ import graft.superstore.SuperstoreETL
 class SuperstoreETLSpec extends AnyFunSuite {
   import TestSpark.spark
 
-  private val csv = "/root/reference/Sample - Superstore.csv"
+  private val csv = WarehouseCache.CsvPath
   private lazy val wh = SuperstoreETL.build(spark, csv)
 
   test("all 15 tables match the reference's exported cardinalities") {

@@ -19,4 +19,6 @@ object TestSpark {
     s
   }
   val sf: String = "/root/testdata/sf0.001"
+  /** The hand-crafted mini Superstore CSV of FIXTURES.md §A1. */
+  val superstoreMini: String = "src/test/resources/superstore_mini.csv"
 }
