@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-round benchmark: runs every SparkEntry query on SPARK_GRAFT_SF_DIR
   * and prints one JSON line with per-query seconds.
   *
@@ -259,7 +257,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Shuffle/scratch on the RAM-backed fs when one exists: this box
     // throttles BUFFERED file writes to ~77 MB/s (measured; direct writes
     // do 479 MB/s — an aggressive per-device writeback limit), which taxes
@@ -276,13 +273,7 @@ object Bench {
     // measure on its normal tmpdir). SPARK_GRAFT_SHM=0 forces it off,
     // =1 forces it on regardless of headroom.
     val localDir = Bench.shmLocalDir
-    val b0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events ts is TIMESTAMP(NANOS)
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true") // sorted single-file buckets serve their scan order (Spark self-guards multi-file buckets; BucketedLayoutSpec pins sort-free SMJ + the guard)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val b0 = GraftSession.builder()
     // RAM-backed scratch rides with compression OFF for shuffle/broadcast
     // blocks: lz4 trades CPU + per-exchange latency for disk/network IO
     // that tmpfs never performs. Paired-min A/B (2 alternated full runs
@@ -296,15 +287,9 @@ object Bench {
       .config("spark.shuffle.compress", (!compressOff).toString)
       .config("spark.shuffle.spill.compress", (!compressOff).toString)
       .config("spark.broadcast.compress", (!compressOff).toString))
-    // SPARK_GRAFT_CONF="k=v;k=v" — builder-side conf overrides for
-    // alternated A/B experiments (same spirit as SPARK_GRAFT_ONLY; the
-    // driver's invocation leaves it unset = the committed defaults).
-    // Applied LAST so experiments can override the shm-path defaults.
-    val spark = sys.env.get("SPARK_GRAFT_CONF").toSeq
-      .flatMap(_.split(";")).map(_.trim).filter(_.contains("="))
-      .foldLeft(b1) { (b, kv) =>
-        val Array(k, v) = kv.split("=", 2); b.config(k, v)
-      }.getOrCreate()
+    // SPARK_GRAFT_CONF overrides go LAST so experiments can override the
+    // shm-path defaults.
+    val spark = GraftSession.withOverrides(b1).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // The bench measures sf-scaled throughput on the testdata star. The
     // ss_* reference-workload queries run on the fixed-size superstore
@@ -393,15 +378,12 @@ object Bench {
     // totals from round 17 on are higher than the count-sink rounds by
     // construction (the un-measured window/sort/projection work now
     // bills); the count-sink numbers for this round are kept alongside in
-    // OPTIMIZATION_r17.md, and SPARK_GRAFT_SINK=count reproduces the old
-    // action for cross-round A/Bs.
-    val sinkCount = sys.env.get("SPARK_GRAFT_SINK").contains("count")
+    // OPTIMIZATION_r17.md.
     def runSink(df: org.apache.spark.sql.DataFrame): Unit =
-      if (sinkCount) { df.count(); () }
-      else df.write.format("noop").mode("overwrite").save()
+      df.write.format("noop").mode("overwrite").save()
 
     val calibBefore = calibrate()
-    val calibMtBefore = calibrateMt(cpus.toInt)
+    val calibMtBefore = calibrateMt(GraftSession.cpus)
     val failed = scala.collection.mutable.Set[String]()
     val prepared = scala.collection.mutable.Map[String, org.apache.spark.sql.DataFrame]()
     // warmup pass (untimed) — also constructs the prepared plans
@@ -421,10 +403,9 @@ object Bench {
     // (memory/disk spill bytes, GC ms, task-run ms), attributed by a
     // current-query label with the async listener bus DRAINED at each
     // query boundary (GraftCoreBridge — without the barrier a heavy
-    // query's straggler events bill its successor). This is the
-    // instrument the isolated BenchDiag `spill` mode can't be: spill
-    // under SUITE heap pressure is a different regime than spill with
-    // the heap to itself (the sf30 q73-vs-q4 inversion question).
+    // query's straggler events bill its successor). Spill under SUITE
+    // heap pressure is a different regime than spill with the heap to
+    // itself (the sf30 q73-vs-q4 inversion question).
     // Stderr-only; the timed region gains two ~0 ms bus drains per query.
     val spillOn = sys.env.get("SPARK_GRAFT_SPILL").contains("1")
     val spillCur = new java.util.concurrent.atomic.AtomicReference[String]("")
@@ -490,7 +471,7 @@ object Bench {
     // the warmup); read HERE so the storm self-adjudication below can
     // consult it before the artifact lines are built
     val calibAfter = calibrate()
-    val calibMtAfter = calibrateMt(cpus.toInt)
+    val calibMtAfter = calibrateMt(GraftSession.cpus)
 
     // ---- storm self-adjudication (round 15, VERDICT r14 #4) ------------
     // A degraded window makes the interleaved 3-pass min read as a code

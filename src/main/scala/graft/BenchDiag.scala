@@ -1,24 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Dev diagnostic: time selected queries under runtime-settable config
-  * variants (AQE on/off, shuffle partition counts) to locate fixed
-  * per-query overhead vs real plan cost. Usage:
-  *   runMain graft.BenchDiag confs q10_distinct_customers,...
-  *   runMain graft.BenchDiag samples q51_month_over_month,...
+/** Dev diagnostics on Bench's session and scratch. Usage:
+  *   runMain graft.BenchDiag phases q10_distinct_customers,...
+  *   runMain graft.BenchDiag funnel
+  *   runMain graft.BenchDiag mergeab
   */
 object BenchDiag {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events ts is TIMESTAMP(NANOS)
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true") // sorted single-file buckets serve their scan order (Spark self-guards multi-file buckets; BucketedLayoutSpec pins sort-free SMJ + the guard)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val b0 = GraftSession.builder()
     // Same scratch + compression config as Bench (see Bench.shmLocalDir):
     // a diagnostic that measures on a different shuffle medium than the
     // bench diagnoses the medium, not the query.
@@ -34,38 +24,7 @@ object BenchDiag {
     lazy val names = args(1).split(",").toSeq
     val qs = SparkEntry.queries
 
-    def minOf(name: String, n: Int = 3): Double = {
-      val fn = qs(name)
-      (1 to n).map { _ =>
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).count()
-        (System.nanoTime() - t0) / 1e9
-      }.min
-    }
-
     mode match {
-      case "plan" =>
-        // Split the per-query wall into DataFrame build (Scala-side plan
-        // construction), driver planning (analysis+optimization+physical,
-        // forced via executedPlan), and execution (count(), which re-plans
-        // its own Aggregate on top — so "exec" is an upper bound that still
-        // contains one more optimizer pass). min of 3 per component.
-        names.foreach { name =>
-          val fn = qs(name)
-          fn(spark, sfDir).count() // warm
-          val t = (1 to 3).map { _ =>
-            val t0 = System.nanoTime()
-            val df = fn(spark, sfDir)
-            val t1 = System.nanoTime()
-            df.queryExecution.executedPlan
-            val t2 = System.nanoTime()
-            df.count()
-            val t3 = System.nanoTime()
-            ((t1 - t0) / 1e9, (t2 - t1) / 1e9, (t3 - t2) / 1e9)
-          }
-          val b = t.map(_._1).min; val p = t.map(_._2).min; val e = t.map(_._3).min
-          println(f"$name%-28s build=$b%.3f plan=$p%.3f exec=$e%.3f")
-        }
       case "phases" =>
         // Decompose the per-query noop-sink wall into Catalyst phases
         // (parse+analysis+optimization+planning, read from the write
@@ -99,54 +58,6 @@ object BenchDiag {
           println(f"PHASES $name%-28s wall=$w%.3f catalyst=$ph%.3f exec_residual=${w - ph}%.3f")
         }
         spark.listenerManager.unregister(ql)
-      case "samples" =>
-        names.foreach { name =>
-          qs(name)(spark, sfDir).count()
-          val s = (1 to 5).map { _ =>
-            val t0 = System.nanoTime(); qs(name)(spark, sfDir).count()
-            (System.nanoTime() - t0) / 1e9
-          }
-          println(f"$name%-28s samples=${s.map(x => f"$x%.3f").mkString(",")}")
-        }
-      case "spill" =>
-        // Per-query spill ledger: wall time is storm-dominated at sf30 on
-        // this box (same query swings 5x between legs), but the SPILL
-        // BYTES Spark's task metrics record are a function of memory
-        // budget and plan, not of CPU phase — so a memory ladder reads
-        // spill, not seconds. One warm + one measured run per query.
-        names.foreach { name =>
-          val fn = qs(name)
-          fn(spark, sfDir).count() // warm
-          // same drain assumption as the post-run read (the bus is async;
-          // a listener registered while warm-run events are still queued
-          // would bill them to the measured run)
-          Thread.sleep(2000)
-          val mem = new java.util.concurrent.atomic.AtomicLong
-          val dsk = new java.util.concurrent.atomic.AtomicLong
-          val run = new java.util.concurrent.atomic.AtomicLong
-          val gc  = new java.util.concurrent.atomic.AtomicLong
-          val listener = new org.apache.spark.scheduler.SparkListener {
-            override def onTaskEnd(
-                te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-              val m = te.taskMetrics
-              if (m != null) {
-                mem.addAndGet(m.memoryBytesSpilled)
-                dsk.addAndGet(m.diskBytesSpilled)
-                run.addAndGet(m.executorRunTime)
-                gc.addAndGet(m.jvmGCTime)
-              }
-            }
-          }
-          spark.sparkContext.addSparkListener(listener)
-          val t0 = System.nanoTime()
-          fn(spark, sfDir).count()
-          val w = (System.nanoTime() - t0) / 1e9
-          Thread.sleep(2000)      // drain the listener bus before reading
-          spark.sparkContext.removeSparkListener(listener)
-          println(f"SPILL $name wall=$w%.2f taskSum=${run.get / 1e3}%.1f " +
-            f"gcSum=${gc.get / 1e3}%.1f " +
-            f"memSpill=${mem.get / (1L << 20)}MiB diskSpill=${dsk.get / (1L << 20)}MiB")
-        }
       case "funnel" =>
         // q65 bloom pre-filter selectivity at this SF: how much of the
         // train side the exact confirm join actually sees
@@ -155,51 +66,6 @@ object BenchDiag {
         val fpr = (nMaybe - nHit).toDouble / math.max(1L, nTrain - nHit)
         println(f"FUNNEL train=$nTrain maybe=$nMaybe confirmed=$nHit " +
           f"fpr=$fpr%.5f join_fraction=${nMaybe.toDouble / nTrain}%.5f")
-      case "confs" =>
-        val variants = Seq(
-          "base"        -> Seq(),
-          "aqe_off"     -> Seq("spark.sql.adaptive.enabled" -> "false"),
-          "shuffle8"    -> Seq("spark.sql.shuffle.partitions" -> "8"),
-          "aqe_off_sh8" -> Seq("spark.sql.adaptive.enabled" -> "false",
-                               "spark.sql.shuffle.partitions" -> "8"))
-        names.foreach { name =>
-          qs(name)(spark, sfDir).count() // warm
-          val cells = variants.map { case (vn, confs) =>
-            confs.foreach { case (k, v) => spark.conf.set(k, v) }
-            val t = minOf(name)
-            confs.foreach { case (k, _) => spark.conf.unset(k) }
-            spark.conf.set("spark.sql.shuffle.partitions", cpus)
-            f"$vn=$t%.3f"
-          }
-          println(f"$name%-28s ${cells.mkString(" ")}")
-        }
-      case "zab" =>
-        // q74's rectangle slice over the z-ordered layout vs the
-        // identical slice over the plain table — WALL only (min of 3,
-        // page-cache-hot: on a single box the skipped bytes cost ~nothing,
-        // which is itself the disclosure). The layout's scale claim is
-        // the MUST-READ BYTES reduction, measured deterministically from
-        // the parquet footers (tools/zorder_bytes.py) — the term that is
-        // network/disk on a cluster.
-        import org.apache.spark.sql.functions._
-        val loc = graft.sources.ZOrderLayout.ensureLineitem(spark, sfDir)
-        val maxPk = Tables.lineitem(spark, sfDir)
-          .agg(max(col("l_partkey"))).head().getLong(0)
-        def slice(df: org.apache.spark.sql.DataFrame) = df
-          .filter(col("l_partkey") <= lit(maxPk / 8) &&
-                  col("l_shipdate") >= to_timestamp(lit("1996-01-01")) &&
-                  col("l_shipdate") < to_timestamp(lit("1997-01-01")))
-          .groupBy("l_returnflag").agg(count(lit(1)))
-        def measure(tag: String, df: org.apache.spark.sql.DataFrame): Unit = {
-          df.count() // warm (page cache + codegen)
-          val w = (1 to 3).map { _ =>
-            val t0 = System.nanoTime(); df.count()
-            (System.nanoTime() - t0) / 1e9
-          }.min
-          println(f"ZAB $tag wall_min=$w%.3f  (layout at $loc)")
-        }
-        measure("zorder", slice(spark.read.parquet(loc)))
-        measure("plain ", slice(Tables.lineitem(spark, sfDir)))
       case "mergeab" =>
         // Incremental merge apply vs the full-rebuild twin (rewrite the
         // complete new snapshot from source — the reference ETL's
@@ -273,13 +139,7 @@ object BenchDiag {
 object ExplainQ {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events ts is TIMESTAMP(NANOS)
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true") // sorted single-file buckets serve their scan order (Spark self-guards multi-file buckets; BucketedLayoutSpec pins sort-free SMJ + the guard)
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     args.foreach { name =>
       println(s"===== $name =====")
@@ -308,22 +168,13 @@ object StageTime {
     import org.apache.spark.scheduler._
     import scala.collection.mutable
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events ts is TIMESTAMP(NANOS)
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true") // sorted single-file buckets serve their scan order (Spark self-guards multi-file buckets; BucketedLayoutSpec pins sort-free SMJ + the guard)
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    // default NOOP sink (guide §1.4, matching Bench round 17+): count()
-    // prunes everything cardinality-preserving above the last aggregation,
-    // so a count-sink stage profile misses exactly the stages the bench
-    // bills. SPARK_GRAFT_SINK=count reproduces the old action.
-    val sinkCount = sys.env.get("SPARK_GRAFT_SINK").contains("count")
+    // NOOP sink (guide §1.4, matching Bench round 17+): count() prunes
+    // everything cardinality-preserving above the last aggregation, so a
+    // count-sink stage profile misses exactly the stages the bench bills.
     def runSink(df: org.apache.spark.sql.DataFrame): Unit =
-      if (sinkCount) { df.count(); () }
-      else df.write.format("noop").mode("overwrite").save()
+      df.write.format("noop").mode("overwrite").save()
     args.foreach { name =>
       val fn = SparkEntry.queries(name)
       runSink(fn(spark, sfDir)); runSink(fn(spark, sfDir)) // warm
@@ -363,123 +214,6 @@ object StageTime {
         println(f"  stage $id%3d wall=${wall / 1e3}%.3f s taskSum=${run / 1e3}%.3f s tasks=$n%3d $nm")
       }
     }
-    spark.stop()
-  }
-}
-
-/** Micro shapes: what does the single-threaded lineitem scan+agg cost? */
-object Micro {
-  def main(args: Array[String]): Unit = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.types._
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events ts is TIMESTAMP(NANOS)
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true") // sorted single-file buckets serve their scan order (Spark self-guards multi-file buckets; BucketedLayoutSpec pins sort-free SMJ + the guard)
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val li = Tables.lineitem(spark, sfDir)
-    def dec(c: String) = col(c).cast(DecimalType(18, 2))
-    val rev = dec("l_extendedprice") * (lit(1).cast(DecimalType(18, 2)) - dec("l_discount"))
-    val revD = col("l_extendedprice") * (lit(1.0) - col("l_discount"))
-    val revL = (col("l_extendedprice") * 100).cast(LongType) * (lit(10000L) - (col("l_discount") * 100).cast(LongType) * 100)
-    val shapes: Seq[(String, () => Long)] = Seq(
-      "count_only"      -> (() => li.count()),
-      "scan1col"        -> (() => li.agg(sum("l_partkey")).count()),
-      "scan3col_double" -> (() => li.agg(sum(revD)).count()),
-      "scan3col_dec"    -> (() => li.agg(sum(rev)).count()),
-      "scan3col_long"   -> (() => li.agg(sum(revL)).count()),
-      "grp_nosum"       -> (() => li.groupBy("l_partkey").agg(count(lit(1))).count()),
-      "grp_dec"         -> (() => li.groupBy("l_partkey").agg(sum(rev)).count()),
-      "grp_double"      -> (() => li.groupBy("l_partkey").agg(sum(revD)).count()),
-      "grp_long"        -> (() => li.groupBy("l_partkey").agg(sum(revL)).count()),
-      "grp_repart_dec"  -> (() => li.repartition(32).groupBy("l_partkey").agg(sum(rev)).count())
-    )
-    shapes.foreach { case (_, f) => f() } // warm all
-    val times = scala.collection.mutable.Map[String, Vector[Double]]().withDefaultValue(Vector.empty)
-    (1 to 5).foreach { _ =>
-      shapes.foreach { case (n, f) =>
-        val t0 = System.nanoTime(); f(); times(n) = times(n) :+ (System.nanoTime() - t0) / 1e9
-      }
-    }
-    shapes.foreach { case (n, _) => println(f"$n%-18s min=${times(n).min}%.3f med=${times(n).sorted.apply(2)}%.3f") }
-    spark.stop()
-  }
-}
-
-/** Decompose the shared shingle-index build: explode vs codegen count-agg
-  * vs the ObjectHashAggregate bounded_doc_set — what the df-cap's exec
-  * choice costs over a plain hash agg. runMain graft.MicroShingle */
-object MicroShingle {
-  def main(args: Array[String]): Unit = {
-    import org.apache.spark.sql.functions._
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true") // sorted single-file buckets serve their scan order (Spark self-guards multi-file buckets; BucketedLayoutSpec pins sort-free SMJ + the guard)
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.Natives.registerAll(spark)
-    val s2 = graft.Tuning.boundedAggSession(spark)
-    graft.functions.Natives.registerAll(s2)
-    import graft.functions.WordShingles.word_shingles
-    def docsWide = graft.Tables.documents(s2, sfDir)
-      .repartition(32, col("doc_id"))
-    def exploded = docsWide
-      .select(col("doc_id"), explode(word_shingles(col("text"))).as("shingle"))
-    val shapes: Seq[(String, () => Long)] = Seq(
-      "explode_only"   -> (() => exploded.count()),
-      "plus_count_agg" -> (() => exploded.groupBy("shingle")
-        .agg(count(lit(1)).as("n")).count()),
-      "plus_bounded"   -> (() => exploded.groupBy("shingle")
-        .agg(graft.functions.BoundedDocSetAgg.bounded_doc_set(50)(col("doc_id")).as("g"))
-        .count()))
-    shapes.foreach { case (_, f) => f() }
-    val times = scala.collection.mutable.Map[String, Vector[Double]]().withDefaultValue(Vector.empty)
-    (1 to 5).foreach { _ =>
-      shapes.foreach { case (n, f) =>
-        val t0 = System.nanoTime(); f(); times(n) = times(n) :+ (System.nanoTime() - t0) / 1e9
-      }
-    }
-    shapes.foreach { case (n, _) =>
-      println(f"$n%-16s min=${times(n).min}%.3f med=${times(n).sorted.apply(2)}%.3f") }
-    spark.stop()
-  }
-}
-
-/** Full-suite A/B under a session conf tweak: runMain graft.AbConf k=v [k=v...] */
-object AbConf {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events ts is TIMESTAMP(NANOS)
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true") // sorted single-file buckets serve their scan order (Spark self-guards multi-file buckets; BucketedLayoutSpec pins sort-free SMJ + the guard)
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    args.foreach { kv => val Array(k, v) = kv.split("=", 2); spark.conf.set(k, v) }
-    val queries = SparkEntry.queries.toSeq.filterNot(_._1.startsWith("ss_")).sortBy(_._1)
-    queries.foreach { case (_, fn) => try fn(spark, sfDir).count() catch { case _: Throwable => () } }
-    val samples = scala.collection.mutable.Map[String, Vector[Double]]().withDefaultValue(Vector.empty)
-    (1 to 3).foreach { _ =>
-      System.gc()
-      queries.foreach { case (name, fn) =>
-        val t0 = System.nanoTime()
-        try fn(spark, sfDir).count() catch { case _: Throwable => () }
-        samples(name) = samples(name) :+ (System.nanoTime() - t0) / 1e9
-      }
-    }
-    val mins = queries.map { case (n, _) => n -> samples(n).min }
-    println(f"ABCONF total=${mins.map(_._2).sum}%.2f " + args.mkString(" "))
-    mins.sortBy(-_._2).take(10).foreach { case (n, v) => println(f"  $n%-30s $v%.3f") }
     spark.stop()
   }
 }

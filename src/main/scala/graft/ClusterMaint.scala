@@ -45,14 +45,7 @@ object ClusterMaint {
     val curve = if (args.length > 2) args(2) else "z"
     val scratch = "/root/repo/target/cluster_maint"
     graft.Fs.deleteTree(java.nio.file.Paths.get(scratch))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // curve-specific verbs, one protocol

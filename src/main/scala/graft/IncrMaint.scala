@@ -129,15 +129,7 @@ object IncrMaint {
     val days = if (args.length > 1) args(1).toInt else 1
     val scratch = s"/root/repo/target/incr_maint"
     graft.Fs.deleteTree(java.nio.file.Paths.get(scratch))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true") // sorted single-file buckets serve their scan order (Spark self-guards multi-file buckets; BucketedLayoutSpec pins sort-free SMJ + the guard)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     if (days > 1) { multiCycle(spark, sfDir, days); spark.stop(); return }
 

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-wall probe for the IVF build (round 17, VERDICT r16 #4).
   *
   * The build's lineage cut collects K×dim centroid doubles to the driver
@@ -26,14 +24,7 @@ import org.apache.spark.sql.SparkSession
   */
 object IvfProbe {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.{LshGate, VectorOps}
@@ -38,14 +37,7 @@ object LshLadder {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.functions.Natives.registerAll(spark)
 

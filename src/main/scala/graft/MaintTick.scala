@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.sources.{BucketedLayout, HilbertLayout, ZOrderLayout}
@@ -37,25 +37,13 @@ object MaintTick {
     val maxDays = if (args.length > 1) args(1).toInt else 16
     val scratch = "/root/repo/target/maint_tick"
     graft.Fs.deleteTree(java.nio.file.Paths.get(scratch))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // SPARK_GRAFT_CONF="k=v;k=v" — the Bench/Verify override hook: a
-    // ladder run tightens the policy knobs so every family folds inside
-    // the window (the realistic default-knob cadence is ClusterMaint's
-    // sf30 ladder; THIS ladder proves the single-verb orchestration),
-    // and the knobs used are recorded in the artifact line below.
-    val overrides = sys.env.get("SPARK_GRAFT_CONF").toSeq
-      .flatMap(_.split(";")).map(_.trim).filter(_.contains("="))
-      .map { kv => val Array(k, v) = kv.split("=", 2); (k, v) }
-    val spark = overrides
-      .foldLeft(b0) { case (b, (k, v)) => b.config(k, v) }.getOrCreate()
-    println(s"""{"conf_overrides":{${overrides.map { case (k, v) =>
+    // SPARK_GRAFT_CONF: a ladder run tightens the policy knobs so every
+    // family folds inside the window (the realistic default-knob cadence
+    // is ClusterMaint's sf30 ladder; THIS ladder proves the single-verb
+    // orchestration), and the knobs used are recorded in the artifact
+    // line below.
+    val spark = GraftSession.withOverrides(GraftSession.builder()).getOrCreate()
+    println(s"""{"conf_overrides":{${GraftSession.confOverrides.map { case (k, v) =>
       s""""$k":"$v"""" }.mkString(",")}}}""")
     spark.sparkContext.setLogLevel("WARN")
     // bucketed layouts are size-gated in the query path; the ladder

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Deliberately sign-skewed embeddings corpus for the LSH split ladder
@@ -28,13 +27,7 @@ object SkewGen {
   def main(args: Array[String]): Unit = {
     val Array(src, dst, factorS) = args.take(3)
     val factor = factorS.toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val emb = Tables.embeddings(spark, src)

@@ -1,20 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** t1 smoke twin: runs the flagship SparkEntry.entry and prints its row
   * count (driver checks rows > 0). */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events ts is TIMESTAMP(NANOS)
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true") // sorted single-file buckets serve their scan order (Spark self-guards multi-file buckets; BucketedLayoutSpec pins sort-free SMJ + the guard)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val n = SparkEntry.entry(spark).count()
     println(s"ENTRY_ROWS=$n")

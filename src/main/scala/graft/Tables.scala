@@ -21,10 +21,10 @@ object Tables {
   private val scans =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]
 
-  /** Drop cache entries belonging to stopped sessions (Tune and the test
-    * harness create and stop many sessions per JVM; without eviction their
-    * resolved scans — and any persisted calendars — would be retained for
-    * the JVM lifetime). Cheap: runs on every cache access, map is tiny. */
+  /** Drop cache entries belonging to stopped sessions (a JVM that creates
+    * and stops several sessions would otherwise retain their resolved
+    * scans — and any persisted calendars — for the JVM lifetime). Cheap:
+    * runs on every cache access, map is tiny. */
   private def evictStopped(): Unit = {
     scans.keySet.removeIf { case (s, _) => s.sparkContext.isStopped }
     calendars.keySet.removeIf { case (s, _) => s.sparkContext.isStopped }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,31 +11,17 @@ object Verify {
     // resolve when the driver replays them in DuckDB.
     val whDir = outDir.stripSuffix("/") + "_wh"
     System.setProperty("graft.wh.dir", whDir)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val b0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events ts is TIMESTAMP(NANOS)
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true") // sorted single-file buckets serve their scan order (Spark self-guards multi-file buckets; BucketedLayoutSpec pins sort-free SMJ + the guard)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // SPARK_GRAFT_CONF="k=v;k=v" — same override hook as Bench: lets a
-    // builder session oracle-check a GATED branch (e.g. force the
-    // bucketed family layouts at sf0.01 with
+    // SPARK_GRAFT_CONF lets a builder session oracle-check a GATED branch
+    // (e.g. force the bucketed family layouts at sf0.01 with
     // graft.bucketed.minBucketBytes=0) instead of trusting the
-    // equal-rows spec pin alone. The driver's invocation leaves it
-    // unset = the committed gate defaults.
-    val overrides = sys.env.get("SPARK_GRAFT_CONF").toSeq
-      .flatMap(_.split(";")).map(_.trim).filter(_.contains("="))
-      .map { kv => val Array(k, v) = kv.split("=", 2); (k, v) }
-    val spark = overrides
-      .foldLeft(b0) { case (b, (k, v)) => b.config(k, v) }.getOrCreate()
+    // equal-rows spec pin alone.
+    val spark = GraftSession.withOverrides(GraftSession.builder()).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Record which ambient overrides (if any) produced this artifact — a
     // forced-gate verify run must be distinguishable from a default-gate
     // one after the fact (both on stderr and durably in the dump dir).
-    val ovJson = overrides
+    val ovJson = GraftSession.confOverrides
       .map { case (k, v) => s""""$k": "$v"""" }.mkString("{", ", ", "}")
     System.err.println(s"[verify] conf overrides: $ovJson")
     Files.writeString(Paths.get(s"$outDir/_conf_overrides.json"), ovJson)

@@ -625,15 +625,7 @@ object IvfIndex {
   /** Index-build CLI: `runMain graft.operators.IvfIndex <sfDir> [indexDir]`. */
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events ts is TIMESTAMP(NANOS)
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true") // sorted single-file buckets serve their scan order (Spark self-guards multi-file buckets; BucketedLayoutSpec pins sort-free SMJ + the guard)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = graft.GraftSession.builder().getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     val k = kFor(s, sfDir)
     val outDir = if (args.length > 1) args(1) else indexDir(sfDir, k)

@@ -248,11 +248,9 @@ object LshGate {
 
   // The oracle SQL is rendered in the same JVM that runs the Spark
   // queries (Verify), so the forced-conf hook is the same SPARK_GRAFT_CONF
-  // environment both sides see. Parsed once: env is immutable per JVM.
+  // environment both sides see.
   private lazy val envConf: Map[String, String] =
-    sys.env.get("SPARK_GRAFT_CONF").toSeq
-      .flatMap(_.split(";")).map(_.trim).filter(_.contains("="))
-      .map { kv => val Array(k, v) = kv.split("=", 2); (k, v) }.toMap
+    graft.GraftSession.confOverrides.toMap
 
   /** Env-rendered conf for oracle-side derivations OUTSIDE the gate —
     * the same SPARK_GRAFT_CONF hook, shared so every dial that must keep

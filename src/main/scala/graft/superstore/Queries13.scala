@@ -89,10 +89,11 @@ object Queries13 {
       .orderBy("state_name", "full_date", "order_code")
 
   /** q7 — average delivery time per ship mode via the two role-playing
-    * Calendar joins (cell 14). */
+    * Calendar joins (cell 14), both projected from one read of Calendar. */
   val q7_delivery_time: WQ = wh => {
-    val c1 = wh("Calendar").select(col("calendar_id").as("oc_id"), col("full_date").as("od"))
-    val c2 = wh("Calendar").select(col("calendar_id").as("sc_id"), col("full_date").as("sd"))
+    val cal = wh("Calendar")
+    val c1 = cal.select(col("calendar_id").as("oc_id"), col("full_date").as("od"))
+    val c2 = cal.select(col("calendar_id").as("sc_id"), col("full_date").as("sd"))
     wh("Orders")
       .join(broadcast(wh("Shipping")), "shipping_id")
       .join(broadcast(c1), col("order_calendar_id") === col("oc_id"))

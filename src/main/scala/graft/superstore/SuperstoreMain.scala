@@ -1,7 +1,5 @@
 package graft.superstore
 
-import org.apache.spark.sql.SparkSession
-
 /** Warehouse CLI (the reference's `python etl.py` + notebook analog):
   * build the 15-table star schema from the CSV, persist as parquet, run
   * the 13-query workload.
@@ -12,14 +10,7 @@ object SuperstoreMain {
     require(args.length >= 2,
       "usage: SuperstoreMain <csvPath> <outDir> [queryName...]")
     val Array(csvPath, outDir) = args.take(2)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events ts is TIMESTAMP(NANOS)
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true") // sorted single-file buckets serve their scan order (Spark self-guards multi-file buckets; BucketedLayoutSpec pins sort-free SMJ + the guard)
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val wh = WarehouseCache.write(SuperstoreETL.build(spark, csvPath), outDir)
