@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{LshGate, VectorOps}
@@ -16,7 +17,8 @@ import graft.operators.{LshGate, VectorOps}
   *    max_cell: the quantity the split bounds — a skewed corpus shows
   *    max_bucket ≫ target while max_cell returns to ~the irreducible
   *    duplicate-cluster size)
-  *  - q42 output rows and wall seconds
+  *  - q42 output rows and wall seconds (the noop sink, like Bench —
+  *    count() would let the optimizer prune the verified columns)
   *  - probe-anchored sampled recall at cosine ≥ 0.2 and ≥ 0.4 (a partner
   *    counts as CAUGHT when it shares the probe's bucket AND extension
   *    code — the operator's own candidate grain). Honest single-band
@@ -30,9 +32,13 @@ import graft.operators.{LshGate, VectorOps}
   * Usage: runMain graft.LshLadder <sfDir>
   */
 object LshLadder {
-  private def timed[T](f: => T): (T, Double) = {
-    val t0 = System.nanoTime(); val r = f
-    (r, (System.nanoTime() - t0) / 1e9)
+  /** (rows, wall seconds): the wall of a noop write of `df`, which
+    * computes every column; the row count runs afterwards, untimed. */
+  private def timedRun(df: DataFrame): (Long, Double) = {
+    val t0 = System.nanoTime()
+    df.write.format("noop").mode("overwrite").save()
+    val wall = (System.nanoTime() - t0) / 1e9
+    (df.count(), wall)
   }
 
   def main(args: Array[String]): Unit = {
@@ -44,40 +50,16 @@ object LshLadder {
     val n = Tables.embeddingsCount(spark, sfDir)
     val derived = LshGate.derivedBits(n, LshGate.targetRows(spark))
 
-    def report(bits: Int, factor: Long, probes: Int, tag: String): Unit = {
+    def report(bits: Int, factor: Long, tag: String): Unit = {
       spark.conf.set("graft.lsh.bits", bits.toString)
       spark.conf.set("graft.lsh.splitFactor", factor.toString)
-      spark.conf.set("graft.lsh.probes", probes.toString)
       try {
         def coded = VectorOps.lshCodedScan(spark, sfDir, bits)
-        val cells = coded.groupBy("bucket", "ext", "extc").count()
-        val h = cells
+        val h = coded.groupBy("bucket", "extc").count()
           .agg(sum(col("count") * (col("count") - 1) / 2).cast("long"),
                max(col("count")))
           .head
-        // same-cell candidates; multi-probe adds the distance-1
-        // cell-pair mass (each unordered cell pair once — the join's
-        // d1<d2 keeps one orientation of every doc pair)
-        val sameCell = h.getLong(0)
-        val probeCand = if (probes <= 0) 0L else {
-          val a = cells.select(col("bucket"), col("ext"),
-            col("extc").as("ea"), col("count").as("na"))
-          // side b from a SECOND groupBy over a fresh coded scan (`coded`
-          // is a def → fresh exprIds end to end) — the q42 fresh-relation
-          // discipline (ADVICE r15): two selects over the same `cells`
-          // subtree lean on DeduplicateRelations, which was observed to
-          // miss in long warm sessions (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND)
-          val b = coded.groupBy("bucket", "ext", "extc").count()
-            .select(col("bucket").as("bucket_b"),
-            col("extc").as("eb"), col("count").as("nb"))
-          val dx = col("ea").bitwiseXOR(col("eb"))
-          a.join(b, col("bucket") === col("bucket_b") &&
-              col("ea") < col("eb") && dx.bitwiseAND(dx - 1) === 0 &&
-              dx < expr(s"shiftleft(CAST(1 AS BIGINT), least($probes, ext))"))
-            .agg(coalesce(sum(col("na") * col("nb")), lit(0L)).cast("long"))
-            .head.getLong(0)
-        }
-        val (cand, maxCell) = (sameCell + probeCand, h.getLong(1))
+        val (cand, maxCell) = (h.getLong(0), h.getLong(1))
         val maxBucket = coded.groupBy("bucket").count()
           .agg(max(col("count"))).head.getLong(0)
         // SPARK_GRAFT_LSH_SKIPJOIN=mode,mode — skip EXECUTING the
@@ -91,19 +73,15 @@ object LshLadder {
         val q42 = SparkEntry.queries("q42_lsh_neardup")
         val (rows, wall) =
           if (skipJoin) (-1L, -1.0)
-          else timed { q42(spark, sfDir).count() }
+          else timedRun(q42(spark, sfDir))
         // probe-anchored sampled recall, both thresholds from one pass;
         // CAUGHT == the operator's own candidate grain: shares the
-        // probe's (bucket, extc), or — under multi-probe — a cell at
-        // Hamming distance 1 within the probed low bits
+        // probe's (bucket, extc)
         val probeSet = coded.filter(col("vec_id") < 200)
           .select(col("vec_id").as("q_id"), col("v").as("qv"),
                   col("norm").as("qn"), col("bucket").as("qb"),
-                  col("ext").as("qx"), col("extc").as("qe"))
-        val dxq = col("extc").bitwiseXOR(col("qe"))
-        val hit = col("bucket") === col("qb") && (col("extc") === col("qe") ||
-          (lit(probes > 0) && dxq.bitwiseAND(dxq - 1) === 0 &&
-            dxq < expr(s"shiftleft(CAST(1 AS BIGINT), least($probes, qx))")))
+                  col("extc").as("qe"))
+        val hit = col("bucket") === col("qb") && col("extc") === col("qe")
         val r = coded.join(broadcast(probeSet), col("vec_id") =!= col("q_id"))
           .withColumn("cos",
             graft.functions.DotProduct.dot_product(col("qv"), col("v")) /
@@ -119,7 +97,7 @@ object LshLadder {
           if (e == 0) 1.0 else math.rint(10000.0 * c / e) / 10000
         println(
           s"""{"sf_dir":"$sfDir","mode":"$tag","n":$n,"bits":$bits,""" +
-          s""""split_factor":$factor,"probes":$probes,""" +
+          s""""split_factor":$factor,""" +
           s""""cand_pairs":$cand,"cand_per_row":${math.rint(100.0 * cand / n) / 100},""" +
           s""""max_bucket":$maxBucket,"max_cell":$maxCell,""" +
           s""""out_rows":$rows,"wall_s":${math.rint(wall * 100) / 100},""" +
@@ -128,7 +106,6 @@ object LshLadder {
       } finally {
         spark.conf.unset("graft.lsh.bits")
         spark.conf.unset("graft.lsh.splitFactor")
-        spark.conf.unset("graft.lsh.probes")
       }
     }
 
@@ -144,7 +121,6 @@ object LshLadder {
     def reportBanded(bits: Int, factor: Long, tag: String): Unit = {
       spark.conf.set("graft.lsh.bits", bits.toString)
       spark.conf.set("graft.lsh.splitFactor", factor.toString)
-      spark.conf.set("graft.lsh.probes", "0")
       try {
         val bands = 0 until LshGate.Bands
         val perBand = bands.map { j =>
@@ -162,7 +138,7 @@ object LshLadder {
         val q78 = SparkEntry.queries("q78_lsh_banded")
         val (rows, wall) =
           if (skipJoin) (-1L, -1.0)
-          else timed { q78(spark, sfDir).count() }
+          else timedRun(q78(spark, sfDir))
         // union recall: exact cosine pairs for 200 probe anchors (from
         // band 0's scan — v/norm are band-independent), caught = shares
         // the probe's (bucket, extc) in ANY band
@@ -212,7 +188,6 @@ object LshLadder {
       } finally {
         spark.conf.unset("graft.lsh.bits")
         spark.conf.unset("graft.lsh.splitFactor")
-        spark.conf.unset("graft.lsh.probes")
       }
     }
 
@@ -237,7 +212,7 @@ object LshLadder {
       val q68 = SparkEntry.queries("q68_semdedup")
       val (rows, wall) =
         if (skipJoin) (-1L, -1.0)
-        else timed { q68(spark, sfDir).count() }
+        else timedRun(q68(spark, sfDir))
       val probeSet = asg.filter(col("vec_id") < 200)
         .select(col("vec_id").as("q_id"), col("v").as("qv"),
                 col("norm").as("qn"), col("cid").as("qc"))
@@ -298,17 +273,17 @@ object LshLadder {
       // membership, deduped, verified at cosine ≥ 0.2 — timed end to end
       val (rows, wall) =
         if (skipJoin) (-1L, -1.0)
-        else timed {
+        else {
           val a = asgN.select(col("cid"), col("vec_id").as("d1"),
             col("v").as("v1"), col("norm").as("n1"))
           val b = asgN.select(col("cid").as("cid_b"), col("vec_id").as("d2"),
             col("v").as("v2"), col("norm").as("n2"))
-          a.join(b, col("cid") === col("cid_b") && col("d1") < col("d2"))
+          timedRun(a.join(b, col("cid") === col("cid_b") && col("d1") < col("d2"))
             .withColumn("cos",
               graft.functions.DotProduct.dot_product(col("v1"), col("v2")) /
                 (col("n1") * col("n2")))
             .filter(col("cos") >= 0.2)
-            .select("d1", "d2").distinct().count()
+            .select("d1", "d2").distinct())
         }
       val probeSet = asgN.filter(col("vec_id") < 200)
         .select(col("vec_id").as("q_id"), col("cid").as("qc"))
@@ -380,7 +355,7 @@ object LshLadder {
         val q79 = SparkEntry.queries("q79_semdedup_np")
         val (rows, wall) =
           if (skipJoin) (-1L, -1.0)
-          else timed { q79(spark, sfDir).count() }
+          else timedRun(q79(spark, sfDir))
         // per-vector sign codes (pf grain: one code per vec, not per
         // membership — identical to the operator's coding)
         def codes = graft.operators.IvfIndex.assignments(spark, idx)
@@ -451,10 +426,7 @@ object LshLadder {
     def gated(tag: String)(body: => Unit): Unit = if (want(tag)) body
 
     gated("derived_split") {
-      report(derived, LshGate.splitFactor(spark), 0, "derived_split") }
-    // the recall dial: distance-1 multi-probe over the low 4 suffix bits
-    gated("derived_split_p4") {
-      report(derived, LshGate.splitFactor(spark), 4, "derived_split_p4") }
+      report(derived, LshGate.splitFactor(spark), "derived_split") }
     // the composed-recall answer (round 16): the banded union, split live
     gated("derived_banded") {
       reportBanded(derived, LshGate.splitFactor(spark), "derived_banded") }
@@ -476,8 +448,8 @@ object LshLadder {
     gated("q79_np2_pf32") { reportQ79(2, 32, "q79_np2_pf32") }
     gated("q79_np4") { reportQ79(4, 0, "q79_np4") }
     gated("q79_np4_pf32") { reportQ79(4, 32, "q79_np4_pf32") }
-    gated("derived_nosplit") { report(derived, 0, 0, "derived_nosplit") }
-    if (derived != 8) gated("fixed8") { report(8, 0, 0, "fixed8") }
+    gated("derived_nosplit") { report(derived, 0, "derived_nosplit") }
+    if (derived != 8) gated("fixed8") { report(8, 0, "fixed8") }
     spark.stop()
   }
 }

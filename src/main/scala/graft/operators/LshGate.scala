@@ -93,21 +93,6 @@ object LshGate {
     s.conf.getOption("graft.lsh.splitFactor")
       .map(_.toLong).getOrElse(DefaultSplitFactor)
 
-  /** Multi-probe width for split buckets (round 15, the recall dial on
-    * the overflow split — the nprobe idea applied cell-side): p > 0
-    * additionally admits candidate pairs whose extension codes differ in
-    * EXACTLY ONE of the low min(p, ext) suffix bits. Because the
-    * extension width is a function of the BUCKET, both members of a
-    * same-bucket pair share it, and the probe test is symmetric:
-    * `xor(extc_a, extc_b)` is a power of two below 2^min(p,ext).
-    * Candidates grow by at most the distance-1 cell-pair mass (≤ p
-    * neighbor cells per cell); recall within split buckets recovers the
-    * single-bit-disagreement pairs — the ladder measures both sides.
-    * Default 0 (off): the operator's output is exactly the plain split's.
-    * Conf `graft.lsh.probes`. */
-  def probes(s: SparkSession): Int =
-    s.conf.getOption("graft.lsh.probes").map(_.toInt).getOrElse(0)
-
   /** Usable extension width under base resolution `bits` (constant
     * MaxExtBits for every derivable width; the 64−bits term guards a
     * hand-forced resolution wider than MaxBits). */
@@ -302,26 +287,4 @@ object LshGate {
       .map(_.toLong).getOrElse(DefaultSplitFactor)
     extLadderSql(nRef, target, factor, BandWidth.toString)
   }
-
-  /** The multi-probe width the oracle renders with — same env-conf hook
-    * as the rest of the gate. */
-  def oracleProbes: Int =
-    envConf.get("graft.lsh.probes").map(_.toInt).getOrElse(0)
-
-  /** DuckDB join predicate admitting a candidate pair under multi-probe
-    * width `p`: same cell, OR extension codes differing in exactly one
-    * of the low min(p, ext) bits (power-of-two xor below the probed
-    * range — `ext` is a function of the BUCKET, so both members of a
-    * same-bucket pair share it and the test is symmetric). Semantically
-    * identical to the Spark side's probe-code EXPANSION + equi-join
-    * (each qualifying pair matches on exactly one probe code); the
-    * OR-form is fine at oracle scale, while the Spark side must keep an
-    * equi-join to stay cell-local at corpus scale. p ≤ 0 renders plain
-    * same-cell equality. */
-  def duckProbePredSql(ea: String, eb: String, extRef: String, p: Int): String =
-    if (p <= 0) s"$ea = $eb"
-    else
-      s"""($ea = $eb OR (
-           xor($ea, $eb) > 0 AND (xor($ea, $eb) & (xor($ea, $eb) - 1)) = 0
-           AND xor($ea, $eb) < (CAST(1 AS BIGINT) << LEAST($p, $extRef))))"""
 }

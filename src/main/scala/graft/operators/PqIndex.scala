@@ -65,16 +65,15 @@ object PqIndex {
       .as[(Int, Int, Seq[Double])].collect()
       .map { case (m, cid, cv) => (m, cid) -> cv }.toMap
 
+    // no hint here: the codebook is also written as-is below, and a
+    // broadcast hint on a frame that is not a join side is dropped with a
+    // HintErrorLogger warning
     def centDf(c: Map[(Int, Int), Seq[Double]]): DataFrame =
-      broadcast(c.toSeq.map { case ((m, cid), cv) => (m, cid, cv) }
-        .toDF("m", "cid", "cv"))
+      c.toSeq.map { case ((m, cid), cv) => (m, cid, cv) }
+        .toDF("m", "cid", "cv")
 
     def assign(c: Map[(Int, Int), Seq[Double]]): DataFrame =
-      sub.join(centDf(c), Seq("m"))
-        .withColumn("d2", sqdist)
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("vec_id", "m").orderBy(col("d2"), col("cid"))))
-        .filter(col("rn") === 1)
+      assignCells(sub, centDf(c))
 
     for (_ <- 1 to Iters) {
       val updated = assign(cent)
@@ -99,6 +98,16 @@ object PqIndex {
     Files.writeString(Paths.get(s"$dir/_meta.json"),
       s"""{"sfDir":"$sfDir","pq":true,"m":$M,"kc":$Kc,"iters":$Iters}""")
   }
+
+  /** Nearest centroid per (vec_id, m) sub-vector, ties to the smaller
+    * cid: `sub` (vec_id, m, sv) joined to the broadcast M×Kc codebook
+    * `cent` (m, cid, cv). */
+  private[graft] def assignCells(sub: DataFrame, cent: DataFrame): DataFrame =
+    sub.join(broadcast(cent), Seq("m"))
+      .withColumn("d2", sqdist)
+      .withColumn("rn", row_number().over(
+        Window.partitionBy("vec_id", "m").orderBy(col("d2"), col("cid"))))
+      .filter(col("rn") === 1)
 
   def ensure(s: SparkSession, sfDir: String): String = synchronized {
     val dir = indexDir(sfDir)

@@ -140,28 +140,16 @@ object VectorOps {
     def side(i: Int): DataFrame =
       lshCodedScan(s, d, bits)
         .select(col("bucket").as(s"bucket$i"), col("extc").as(s"extc$i"),
-                col("ext").as(s"ext$i"),
                 col("vec_id").as(s"d$i"), col("v").as(s"v$i"),
                 col("norm").as(s"n$i"))
-    // multi-probe (round 15, the recall dial on the split — see
-    // LshGate.probes): side 1 expands each row into its own cell code
-    // plus the min(p, ext) single-bit neighbors, so the pair join STAYS
-    // an equi-join on (bucket, probe) — cell-local at corpus scale —
-    // while admitting distance-1 pairs. `ext` is a function of the
-    // bucket (both pair members share it), so each qualifying pair
-    // matches on exactly one probe code: no duplicate rows, no dedup
-    // pass. p = 0 (the default) probes nothing: bit-identical to the
-    // plain split.
-    val p = LshGate.probes(s)
-    val a =
-      if (p <= 0) side(1).withColumn("probe", col("extc1"))
-      else side(1)
-        .withColumn("j", explode(expr(s"sequence(0, least($p, ext1))")))
-        .withColumn("probe", expr(
-          "CASE WHEN j = 0 THEN extc1 " +
-          "ELSE extc1 ^ shiftleft(CAST(1 AS BIGINT), j - 1) END"))
-    a.join(side(2),
-        col("bucket1") === col("bucket2") && col("probe") === col("extc2"))
+    // pairs match on the exact cell (bucket, extc). MEASURED NEGATIVE
+    // (round 15, EXPLAIN_r15 §1.5): multi-probe — also admitting cells
+    // one low suffix bit apart — bought +0.004–0.037 recall@0.4 for
+    // +9–91% candidates on the skew ladder, since straddling pairs
+    // disagree in 2–4 suffix bits, not one. Recall is the multi-band
+    // q78's job.
+    side(1).join(side(2),
+        col("bucket1") === col("bucket2") && col("extc1") === col("extc2"))
       .filter(col("d1") < col("d2"))
       .withColumn("cosine", dot_product(col("v1"), col("v2")) / (col("n1") * col("n2")))
       .filter(col("cosine") >= 0.2)
@@ -348,88 +336,45 @@ object VectorOps {
         col("cell.extc").as("extc"))
   }
 
-  /** q78 plan A/B dial (round 17, VERDICT r16 #3): the default plan pays
-    * one dot per CATCHING BAND per pair (up to [[LshGate.Bands]]×
-    * redundant dot work) but ships only verified narrow triples into the
-    * cross-band dedup shuffle; `graft.lsh.bandedDedupFirst=1` dedups the
-    * colliding pairs on the narrow exploded keys FIRST (the band join
-    * carries no vectors at all), then one vector rejoin + exactly ONE dot
-    * per distinct pair. The trade: ≤4× less dot work vs shuffling ALL
-    * colliding pairs (pre-verify — including the sub-bar mass the default
-    * filters map-side) plus two narrow equi-joins to re-attach vectors.
-    * Output identical by construction (the cosine is band-independent, so
-    * the default's MIN is the same double; n_bands counts collisions
-    * either way) — VectorOpsSpec pins plan-B ≡ plan-A, and the oracle
-    * text never changes.
+  /** q78: the four band self-joins verify each colliding pair with one
+    * dot per CATCHING BAND (up to [[LshGate.Bands]]× redundant dot work)
+    * and ship only the verified narrow triples into the cross-band dedup
+    * shuffle; the cosine is band-independent, so MIN picks the same double
+    * whichever band caught the pair.
     *
     * MEASURED NEGATIVE (round 17, alternated sf30 A/B, min-of-3 legs):
-    * default 32.92 / 31.53 s vs dedup-first 130.35 / 48.5 s — the saved
-    * dot work (≤4×, a tight codegen'd loop) never pays for shuffling the
-    * FULL pre-verify collision mass (the replica corpus's sub-bar pairs
-    * included) plus two pair-corpus rejoins; the default's map-side
-    * cosine filter is doing the real work. The dial stays for corpora
-    * where verified pairs ≈ colliding pairs (then the trade flips), but
-    * the default remains plan A — re-measure before believing otherwise. */
-  def lshBandedDedupFirst(s: SparkSession): Boolean =
-    s.conf.getOption("graft.lsh.bandedDedupFirst")
-      .exists(v => v == "1" || v == "true")
-
+    * dedup-first — narrow band join, pair dedup BEFORE any dot, then one
+    * vector rejoin and exactly one dot per distinct pair — ran 130.35 /
+    * 48.5 s against this plan's 32.92 / 31.53 s. The saved dot work (≤4×,
+    * a tight codegen'd loop) never pays for shuffling the FULL pre-verify
+    * collision mass (sub-bar pairs included) plus two pair-corpus
+    * rejoins; the map-side cosine filter here does the real work. The
+    * trade could flip only where verified pairs ≈ colliding pairs. */
   val q78_lsh_banded: Q = (s, d) => {
     register(s)
     val bits = LshGate.bits(s, d)
-    if (!lshBandedDedupFirst(s)) {
-      def side(i: Int): DataFrame =
-        lshAllBandsScan(s, d, bits)
-          .select(col("band").as(s"band$i"), col("bucket").as(s"bucket$i"),
-                  col("extc").as(s"extc$i"), col("vec_id").as(s"d$i"),
-                  col("v").as(s"v$i"), col("norm").as(s"n$i"))
-      side(1).join(side(2),
-          col("band1") === col("band2") && col("bucket1") === col("bucket2") &&
-            col("extc1") === col("extc2"))
-        .filter(col("d1") < col("d2"))
-        .withColumn("cosine",
-          dot_product(col("v1"), col("v2")) / (col("n1") * col("n2")))
-        .filter(col("cosine") >= 0.2)
-        .groupBy("d1", "d2")
-        .agg(min(col("cosine")).as("cosine"),
-             count(lit(1)).cast(IntegerType).as("n_bands"))
-        .select(col("d1"), col("d2"), col("cosine"), col("n_bands"))
-        // materialize the pair report before the global sort: the range
-        // sampler otherwise re-runs the verification aggregate over the
-        // banded exchange (q63's note). Round-robin — the aggregate
-        // already carries hash(d1, d2).
-        .repartition(s.sessionState.conf.numShufflePartitions)
-        .orderBy("d1", "d2")
-    } else {
-      // plan B: narrow band join (vec_id + cell keys only — column
-      // pruning drops v/norm from the exploded scan), pair dedup BEFORE
-      // any dot, then a 1-per-pair vector rejoin
-      def narrow(i: Int): DataFrame =
-        lshAllBandsScan(s, d, bits)
-          .select(col("band").as(s"band$i"), col("bucket").as(s"bucket$i"),
-                  col("extc").as(s"extc$i"), col("vec_id").as(s"d$i"))
-      val pairs = narrow(1).join(narrow(2),
-          col("band1") === col("band2") && col("bucket1") === col("bucket2") &&
-            col("extc1") === col("extc2"))
-        .filter(col("d1") < col("d2"))
-        .groupBy("d1", "d2")
-        .agg(count(lit(1)).cast(IntegerType).as("n_bands"))
-      def vecs(i: Int): DataFrame =
-        s.read.parquet(s"$d/embeddings.parquet")
-          .select(col("vec_id").as(s"d$i"), col("embedding").as(s"v$i"))
-          .withColumn(s"n$i", sqrt(dot_product(col(s"v$i"), col(s"v$i"))))
-      pairs.join(vecs(1), Seq("d1")).join(vecs(2), Seq("d2"))
-        .withColumn("cosine",
-          dot_product(col("v1"), col("v2")) / (col("n1") * col("n2")))
-        .filter(col("cosine") >= 0.2)
-        .select(col("d1"), col("d2"), col("cosine"), col("n_bands"))
-        // materialize before the global sort: the range sampler otherwise
-        // re-runs the vector rejoin + every pair's dot product (q63's
-        // note; the child carries the last join's partitioning, so the
-        // hash exchange on the sort keys is not elided)
-        .repartition(col("d1"), col("d2"))
-        .orderBy("d1", "d2")
-    }
+    def side(i: Int): DataFrame =
+      lshAllBandsScan(s, d, bits)
+        .select(col("band").as(s"band$i"), col("bucket").as(s"bucket$i"),
+                col("extc").as(s"extc$i"), col("vec_id").as(s"d$i"),
+                col("v").as(s"v$i"), col("norm").as(s"n$i"))
+    side(1).join(side(2),
+        col("band1") === col("band2") && col("bucket1") === col("bucket2") &&
+          col("extc1") === col("extc2"))
+      .filter(col("d1") < col("d2"))
+      .withColumn("cosine",
+        dot_product(col("v1"), col("v2")) / (col("n1") * col("n2")))
+      .filter(col("cosine") >= 0.2)
+      .groupBy("d1", "d2")
+      .agg(min(col("cosine")).as("cosine"),
+           count(lit(1)).cast(IntegerType).as("n_bands"))
+      .select(col("d1"), col("d2"), col("cosine"), col("n_bands"))
+      // materialize the pair report before the global sort: the range
+      // sampler otherwise re-runs the verification aggregate over the
+      // banded exchange (q63's note). Round-robin — the aggregate
+      // already carries hash(d1, d2).
+      .repartition(s.sessionState.conf.numShufflePartitions)
+      .orderBy("d1", "d2")
   }
 
   // ------------------------------------------------- kNN label vote
@@ -762,7 +707,10 @@ object VectorOps {
     math.floor(bits * p + 2.0 * math.sqrt(bits * p * (1.0 - p))).toInt
   }
 
-  val q79_semdedup_np: Q = (s, d) => {
+  /** q79's verified-pair stream, before the election: every cell-local
+    * pair (d1 < d2) at cosine ≥ [[SemDedupTau]], once per cell the pair
+    * shares, so a pair sharing two cells appears twice with one cosine. */
+  private[graft] def semDedupNpPairs(s: SparkSession, d: String): DataFrame = {
     register(s)
     val idx = IvfIndex.ensure(s, d)
     val np = semDedupNp(s)
@@ -808,6 +756,10 @@ object VectorOps {
       .withColumn("cos",
         dot_product(col("v1"), col("v2")) / (col("n1") * col("n2")))
       .filter(col("cos") >= SemDedupTau)
+  }
+
+  val q79_semdedup_np: Q = (s, d) =>
+    semDedupNpPairs(s, d)
       // a pair sharing BOTH cells appears twice with the same cosine;
       // the min-by-(candidate id) election dedups and elects in one
       // map-side-combinable aggregate. min(d1) + min_by(cos, d1), NOT
@@ -817,7 +769,8 @@ object VectorOps {
       // primitive-buffer aggregates hash-aggregate instead. Equivalent
       // by construction: rows sharing (d2, d1) carry the SAME cosine
       // (one pair seen via both shared cells), so min_by's first-seen
-      // tie-break cannot differ from the struct ordering's cos tie-break.
+      // tie-break cannot differ from the struct ordering's cos tie-break
+      // (PropertySpec checks it).
       .groupBy(col("d2").as("vec_id"))
       .agg(min(col("d1")).as("dup_of"), min_by(col("cos"), col("d1")).as("cosine"))
       .select(col("vec_id"), col("dup_of"), col("cosine"))
@@ -829,7 +782,6 @@ object VectorOps {
       // sortBeforeRepartition pass. Isolated noop A/B at sf0.1:
       // 0.61-0.78 s direct vs 0.83-0.98 s with the repartition.
       .orderBy("vec_id")
-  }
 
   // ===================================================================
   val queries: Map[String, Q] = Map(
@@ -1169,7 +1121,7 @@ object VectorOps {
            ${dotDuck("a.v", "b.v")} / (a.norm * b.norm) AS cosine
          FROM ve a JOIN ve b
            ON a.bucket = b.bucket
-           AND ${LshGate.duckProbePredSql("a.extc", "b.extc", "a.ext", LshGate.oracleProbes)}
+           AND a.extc = b.extc
            AND a.vec_id < b.vec_id
          WHERE ${dotDuck("a.v", "b.v")} / (a.norm * b.norm) >= 0.2
          ORDER BY a.bucket, d1, d2""",

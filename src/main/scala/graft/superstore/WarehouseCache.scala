@@ -2,6 +2,8 @@ package graft.superstore
 
 import java.util.concurrent.ConcurrentHashMap
 
+import scala.util.Try
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Session-scoped materialized warehouse for the SparkEntry `ss_*` queries.
@@ -31,12 +33,20 @@ object WarehouseCache {
     s"${System.getProperty("java.io.tmpdir")}/graft_wh")
 
   private val cache =
-    new ConcurrentHashMap[(SparkSession, String), Map[String, DataFrame]]
+    new ConcurrentHashMap[(SparkSession, String), Try[Map[String, DataFrame]]]
 
-  def get(spark: SparkSession): Map[String, DataFrame] =
-    cache.computeIfAbsent((spark, dir), { case (s, d) =>
-      write(SuperstoreETL.build(s, CsvPath), d)
-    })
+  def get(spark: SparkSession): Map[String, DataFrame] = {
+    val d = dir
+    once(spark, d)(write(SuperstoreETL.build(spark, CsvPath), d))
+  }
+
+  /** Runs `build` at most once per (session, dir). A failed build is
+    * remembered and its exception rethrown to every later caller, so a
+    * missing reference CSV fails each `ss_*` query loudly without
+    * re-running the ETL per query. */
+  private[graft] def once(spark: SparkSession, d: String)(
+      build: => Map[String, DataFrame]): Map[String, DataFrame] =
+    cache.computeIfAbsent((spark, d), _ => Try(build)).get
 
   /** Writes each of the 15 tables of a built warehouse to `dir/<table>` as
     * one parquet file and returns plain parquet scans over what was

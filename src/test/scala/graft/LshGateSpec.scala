@@ -145,58 +145,6 @@ class LshGateSpec extends AnyFunSuite {
     }
   }
 
-  test("multi-probe under a forced split == pure-Scala oracle; superset of the plain split") {
-    val d = sf
-    val (bits, target, factor, p) = (4, 4L, 2L, 2)
-    spark.conf.set("graft.lsh.bits", bits.toString)
-    spark.conf.set("graft.lsh.targetBucketRows", target.toString)
-    spark.conf.set("graft.lsh.splitFactor", factor.toString)
-    try {
-      def run() = SparkEntry.queries("q42_lsh_neardup")(spark, d)
-        .select(col("bucket"), col("d1"), col("d2")).collect()
-        .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSet
-      val plain = run()
-      spark.conf.set("graft.lsh.probes", p.toString)
-      val probed = run()
-      assert(plain.subsetOf(probed) && probed.size > plain.size,
-        "multi-probe must strictly extend the plain split's candidates here")
-      // independent oracle: same census/ladder/suffix derivation as the
-      // split spec, pair admitted when cells are equal OR differ in
-      // exactly one of the low min(p, ext) bits (ext is per-bucket, so
-      // the condition is symmetric)
-      val vecs = Tables.embeddings(spark, d).select("vec_id", "embedding")
-        .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-      def bucketOf(v: Array[Float]): Int =
-        (0 until bits).map(i => if (v(i) > 0f) 1 << i else 0).sum
-      val ext = vecs.groupBy(x => bucketOf(x._2)).map { case (b, xs) =>
-        b -> LshGate.extBits(xs.length, target, factor, LshGate.maxExtFor(bits)) }
-      def extcOf(v: Array[Float], e: Int): Long =
-        if (e <= 0) 0L
-        else (64 - e until 64).map(i => if (v(i) > 0f) 1L << (i - (64 - e)) else 0L).sum
-      def dot(a: Array[Float], b: Array[Float]): Double =
-        (0 until 64).foldLeft(0.0)((acc, i) => acc + a(i).toDouble * b(i).toDouble)
-      val keyed = vecs.map { case (id, v) =>
-        val b = bucketOf(v); (id, v, b, extcOf(v, ext(b))) }
-      def probeHit(b: Int, e1: Long, e2: Long): Boolean = {
-        val dx = e1 ^ e2
-        e1 == e2 || (dx > 0 && (dx & (dx - 1)) == 0 &&
-          dx < (1L << math.min(p, ext(b))))
-      }
-      val expect = (for {
-        (i1, v1, b1, e1) <- keyed.toSeq
-        (i2, v2, b2, e2) <- keyed.toSeq
-        if i1 < i2 && b1 == b2 && probeHit(b1, e1, e2)
-        if dot(v1, v2) / (math.sqrt(dot(v1, v1)) * math.sqrt(dot(v2, v2))) >= 0.2
-      } yield (b1, i1, i2)).toSet
-      assert(probed == expect, "multi-probe q42 != pure-Scala oracle")
-    } finally {
-      spark.conf.unset("graft.lsh.bits")
-      spark.conf.unset("graft.lsh.targetBucketRows")
-      spark.conf.unset("graft.lsh.splitFactor")
-      spark.conf.unset("graft.lsh.probes")
-    }
-  }
-
   test("split is a no-op where no bucket overflows (default small-SF invariance)") {
     val d = sf // 500 rows over 256 buckets: far under the 128-row trigger
     val dflt = SparkEntry.queries("q42_lsh_neardup")(spark, d)

@@ -1,6 +1,8 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{PqIndex, VectorOps}
@@ -52,6 +54,29 @@ class PqSpec extends AnyFunSuite {
     assert(byQ.forall(_._2.map(_.getInt(1)).sorted.sameElements(Seq(1, 2, 3))))
     assert(out.forall(r => r.getLong(2) != r.getLong(0)), "self-match leaked")
     assert(out.forall(r => math.abs(r.getDouble(3)) <= 1.0 + 1e-12))
+  }
+
+  test("broadcast hints land on joins: the codebook into assignment, q66's probes") {
+    // own session with size-based broadcasting off: only a hint can plan
+    // a broadcast join
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    import s2.implicits._
+    graft.functions.Natives.registerAll(s2)
+    def broadcastJoins(df: DataFrame): Seq[String] =
+      df.queryExecution.sparkPlan.collect {
+        case j: BroadcastHashJoinExec => j.nodeName
+        case j: BroadcastNestedLoopJoinExec => j.nodeName
+      }
+    val sub = Seq((7L, 0, Seq(0.0, 1.0))).toDF("vec_id", "m", "sv")
+    val cent = Seq((0, 0, Seq(0.0, 0.0)), (0, 1, Seq(0.0, 0.9)))
+      .toDF("m", "cid", "cv")
+    val assigned = PqIndex.assignCells(sub, cent)
+    assert(broadcastJoins(assigned) == Seq("BroadcastHashJoin"))
+    assert(assigned.select("cid").as[Int].collect().toSeq == Seq(1))
+    // the probe cross join and the probe re-attach both broadcast
+    assert(broadcastJoins(VectorOps.q66_pq_ann(s2, sf)).sorted ==
+      Seq("BroadcastHashJoin", "BroadcastNestedLoopJoin"))
   }
 
   test("native pq_adc equals the composed aggregate fold on the real index") {

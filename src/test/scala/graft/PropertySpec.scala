@@ -3,8 +3,9 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalacheck.Prop.forAll
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 import graft.superstore.SuperstoreETL
 
@@ -91,5 +92,40 @@ class PropertySpec extends AnyFunSuite {
       } && arr.length == ((nBits + 63) / 64).toInt
     }
     checkProp(prop)
+  }
+
+  test("q79 election: min(d1) + min_by(cos, d1) == min(struct(d1, cos)) in any arrival order") {
+    // q79's own verified-pair stream; np = 4 shares more cells per pair
+    // than the default 2, so more (d2, d1) keys repeat
+    val s2 = spark.newSession()
+    val streams = Seq(2, 4).map { np =>
+      s2.conf.set("graft.semdedup.np", np.toString)
+      np -> graft.operators.VectorOps.semDedupNpPairs(s2, TestSpark.sf)
+        .select("d1", "d2", "cos").collect().toSeq
+    }.toMap
+    streams.values.foreach { rows =>
+      val byPair = rows.groupBy(r => (r.getLong(1), r.getLong(0)))
+      assert(byPair.exists(_._2.size > 1), "no (d2, d1) key repeats: the check is vacuous")
+      assert(byPair.forall(_._2.map(_.getDouble(2)).distinct.size == 1),
+        "rows sharing (d2, d1) carry different cosines")
+    }
+    val schema = StructType(Seq(StructField("d1", LongType), StructField("d2", LongType),
+      StructField("cos", DoubleType)))
+    def elect(df: DataFrame, agg: Column*): Map[Long, (Long, Double)] =
+      df.groupBy(col("d2")).agg(agg.head, agg.tail: _*).collect()
+        .map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
+    checkProp(Prop.forAllNoShrink(Gen.oneOf(streams.keys.toSeq), Gen.choose(0L, Long.MaxValue),
+        Gen.choose(1, 12)) { (np, seed, width) =>
+      // the seeded order and the partition width fix which row each
+      // partial aggregate sees first — the only input min_by's tie-break reads
+      s2.conf.set("spark.sql.shuffle.partitions", width.toString)
+      val df = s2.createDataFrame(
+        s2.sparkContext.parallelize(new scala.util.Random(seed).shuffle(streams(np)), width),
+        schema)
+      val byMinBy = elect(df, min(col("d1")), min_by(col("cos"), col("d1")))
+      val first = min(struct(col("d1"), col("cos")))
+      val byStruct = elect(df, first.getField("d1"), first.getField("cos"))
+      Prop(byMinBy == byStruct)
+    }, n = 10)
   }
 }
