@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.sources.{HilbertLayout, LayoutMeta, StatsManifest, ZOrderLayout}
@@ -34,10 +33,7 @@ import graft.sources.StatsManifest.Range
   * Usage: runMain graft.ClusterMaint <sfDir> <maxDays> [z|h]
   */
 object ClusterMaint {
-  private def timed[T](f: => T): (T, Double) = {
-    val t0 = System.nanoTime(); val r = f
-    (r, (System.nanoTime() - t0) / 1e9)
-  }
+  import Maintenance.{timed, fingerprint => fp}
 
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
@@ -48,21 +44,7 @@ object ClusterMaint {
     val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    // curve-specific verbs, one protocol
-    val (ensure, append, maintain, cols) = curve match {
-      case "h" => (
-        (s: SparkSession, d: String) => HilbertLayout.ensureLineitem3(s, d),
-        (s: SparkSession, d: String, df: DataFrame) =>
-          HilbertLayout.appendDeltaLineitem3(s, d, df),
-        (s: SparkSession, d: String) => HilbertLayout.maintain(s, d),
-        HilbertLayout.StatsCols)
-      case _ => (
-        (s: SparkSession, d: String) => ZOrderLayout.ensureLineitem(s, d),
-        (s: SparkSession, d: String, df: DataFrame) =>
-          ZOrderLayout.appendDeltaLineitem(s, d, df),
-        (s: SparkSession, d: String) => ZOrderLayout.maintain(s, d),
-        ZOrderLayout.StatsCols)
-    }
+    val layout = if (curve == "h") HilbertLayout else ZOrderLayout
 
     val li = Tables.lineitem(spark, sfDir)
     val srcA = s"$scratch/a"
@@ -70,7 +52,7 @@ object ClusterMaint {
       .write.parquet(s"$srcA/lineitem.parquet")
     Tables.clearCaches()
 
-    val (loc, tBuild) = timed { ensure(spark, srcA) }
+    val (loc, tBuild) = timed { layout.ensure(spark, srcA) }
     val floor0 = LayoutMeta.probeFloor(loc).getOrElse(0.0)
     println(s"""{"day":0,"curve":"$curve","build_s":${f"$tBuild%.2f"},""" +
       s""""files":${StatsManifest.read(loc).get.size},""" +
@@ -88,27 +70,20 @@ object ClusterMaint {
       col("l_shipdate") >= to_timestamp(lit("1996-01-01")) &&
       col("l_shipdate") < to_timestamp(lit("1997-01-01"))
 
-    def fp(df: DataFrame): (Long, Long) = {
-      val h = df.select(pmod(xxhash64(df.columns.sorted.map(col).toSeq: _*),
-        lit(1000000000L)).as("h"))
-      val r = h.agg(count(lit(1)), sum(col("h"))).head
-      (r.getLong(0), r.getLong(1))
-    }
-
     var foldedDay = -1
     var day = 0
     while (day < maxDays && (foldedDay < 0 || day < foldedDay + 2)) {
       val delta = li.filter(col("l_orderkey") % 128 === day)
       delta.write.mode("append").parquet(s"$srcA/lineitem.parquet")
       Tables.clearCaches()
-      val (_, tAppend) = timed { append(spark, srcA, delta) }
-      val (folded, tMaintain) = timed { maintain(spark, srcA) }
+      val (_, tAppend) = timed { layout.appendDelta(spark, srcA, delta) }
+      val (folded, tMaintain) = timed { layout.maintain(spark, srcA) }
       if (folded.nonEmpty && foldedDay < 0) foldedDay = day
       val entries = StatsManifest.read(loc).get
       // the policy's own metric: anchored to the domains recorded at the
       // last (re)cluster (ADVICE r15 — live domains let outlier deltas
       // shrink existing hull ratios and defer the fold)
-      val metric = LayoutMeta.anchoredProbeBytes(loc, entries, cols)
+      val metric = LayoutMeta.anchoredProbeBytes(loc, entries, layout.StatsCols)
       val floor = LayoutMeta.probeFloor(loc).getOrElse(0.0)
       val must = StatsManifest.mustRead(entries, preds).toSet
       val probeBytes = entries.filter(e => must(e.name)).map(_.bytes).sum
@@ -143,7 +118,7 @@ object ClusterMaint {
     spark.read.parquet(s"$srcA/lineitem.parquet")
       .write.parquet(s"$srcB/lineitem.parquet")
     Tables.clearCaches()
-    val (locB, tRebuild) = timed { ensure(spark, srcB) }
+    val (locB, tRebuild) = timed { layout.ensure(spark, srcB) }
     val (rowsA, hashA) = fp(spark.read.parquet(loc))
     val (rowsB, hashB) = fp(spark.read.parquet(locB))
     println(

@@ -35,10 +35,7 @@ import graft.sources.BucketedLayout
   * EXPLAIN_r14 carries the table.
   */
 object IncrMaint {
-  private def timed[T](f: => T): (T, Double) = {
-    val t0 = System.nanoTime(); val r = f
-    (r, (System.nanoTime() - t0) / 1e9)
-  }
+  import Maintenance.{timed, fingerprint => fp}
 
   /** N-day ingest simulation: base = l_orderkey % 128 >= days, day i
     * ingests the % 128 == i slice (~0.78% each). Every day runs the SAME
@@ -58,12 +55,6 @@ object IncrMaint {
     li.filter(col("l_orderkey") % 128 >= days)
       .write.parquet(s"$srcA/lineitem.parquet")
 
-    def fp(df: DataFrame): (Long, Long) = {
-      val h = df.select(pmod(xxhash64(df.columns.sorted.map(col).toSeq: _*),
-        lit(1000000000L)).as("h"))
-      val r = h.agg(count(lit(1)), sum(col("h"))).head
-      (r.getLong(0), r.getLong(1))
-    }
     val (_, tBuild) = timed {
       BucketedLayout.ensureTable(spark, srcA, "lineitem", "l_orderkey") }
     println(s"""{"day":0,"build_s":${f"$tBuild%.2f"},"files":${
@@ -172,17 +163,8 @@ object IncrMaint {
 
     // merged ≡ rebuilt: order-insensitive value fingerprint over every
     // column (cheap: one pass each side, no shuffle beyond the final agg)
-    def fp(n: String): (Long, Long) = {
-      val df = spark.table(n)
-      // pmod keeps the 180 M-row sum far under Long.Max (ANSI mode would
-      // throw on a full-range xxhash64 sum)
-      val h = df.select(pmod(xxhash64(df.columns.sorted.map(col).toSeq: _*),
-        lit(1000000000L)).as("h"))
-      val r = h.agg(count(lit(1)), sum(col("h"))).head
-      (r.getLong(0), r.getLong(1))
-    }
-    val (rowsA, hashA) = fp(nameA)
-    val (rowsB, hashB) = fp(nameB)
+    val (rowsA, hashA) = fp(spark.table(nameA))
+    val (rowsB, hashB) = fp(spark.table(nameB))
 
     println(
       s"""{"sf_dir":"$sfDir","delta_rows":$deltaRows,"total_rows":$rowsA,""" +

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.sources.{BucketedLayout, HilbertLayout, ZOrderLayout}
@@ -27,10 +26,7 @@ import graft.superstore.{Exporter, WarehouseCache}
   * Usage: runMain graft.MaintTick <sfDir> <maxDays>
   */
 object MaintTick {
-  private def timed[T](f: => T): (T, Double) = {
-    val t0 = System.nanoTime(); val r = f
-    (r, (System.nanoTime() - t0) / 1e9)
-  }
+  import Maintenance.{timed, fingerprint => fp}
 
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
@@ -61,8 +57,8 @@ object MaintTick {
     val (_, tEnsure) = timed {
       BucketedLayout.ensure(spark, src)
       BucketedLayout.ensureOrderkey(spark, src)
-      ZOrderLayout.ensureLineitem(spark, src)
-      HilbertLayout.ensureLineitem3(spark, src)
+      ZOrderLayout.ensure(spark, src)
+      HilbertLayout.ensure(spark, src)
     }
     val wh = WarehouseCache.get(spark)
     val (item, cal) = (wh("Item"), wh("Calendar"))
@@ -92,8 +88,8 @@ object MaintTick {
           if (t == "lineitem") {
             BucketedLayout.appendDelta(spark, src, t, "l_partkey", freshDelta)
             BucketedLayout.appendDelta(spark, src, t, "l_orderkey", freshDelta)
-            ZOrderLayout.appendDeltaLineitem(spark, src, freshDelta)
-            HilbertLayout.appendDeltaLineitem3(spark, src, freshDelta)
+            ZOrderLayout.appendDelta(spark, src, freshDelta)
+            HilbertLayout.appendDelta(spark, src, freshDelta)
           } else BucketedLayout.appendDelta(spark, src, t,
             if (t == "orders") "o_orderkey" else "p_partkey", freshDelta)
         }
@@ -120,16 +116,10 @@ object MaintTick {
     }
 
     // composed end-state fidelity: every maintained layout ≡ its source
-    def fp(df: DataFrame): (Long, Long) = {
-      val h = df.select(pmod(xxhash64(df.columns.sorted.map(col).toSeq: _*),
-        lit(1000000000L)).as("h"))
-      val r = h.agg(count(lit(1)), sum(col("h"))).head
-      (r.getLong(0), r.getLong(1))
-    }
     Tables.clearCaches()
-    val zOk = fp(spark.read.parquet(ZOrderLayout.ensureLineitem(spark, src))) ==
+    val zOk = fp(spark.read.parquet(ZOrderLayout.ensure(spark, src))) ==
       fp(Tables.table(spark, src, "lineitem"))
-    val hOk = fp(spark.read.parquet(HilbertLayout.ensureLineitem3(spark, src))) ==
+    val hOk = fp(spark.read.parquet(HilbertLayout.ensure(spark, src))) ==
       fp(Tables.table(spark, src, "lineitem"))
     val itemCols = item.columns.map(col).toIndexedSeq
     val iOk = {

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
 
 import graft.sources.{BucketedLayout, HilbertLayout, ZOrderLayout}
 
@@ -29,6 +30,10 @@ import graft.sources.{BucketedLayout, HilbertLayout, ZOrderLayout}
   * change below month multiplies leaf count ~30× and deserves an
   * operator decision, and the divergence-rebuild path already proves the
   * from-source rebuild is value-neutral at any grain.
+  *
+  * The z-order and Hilbert rows are one implementation
+  * (`ClusteredLayout.maintain`) over two curve keys; the tick maps over
+  * both layouts, and each answers under its own family name.
   *
   * Design rules the tick inherits from its members:
   *  - MAINTAIN, never create: a family whose layout is absent (not
@@ -74,17 +79,34 @@ object Maintenance {
       Action("bucketed", s"$t/$k", r.isDefined,
         r.fold("held")(c => s"folded ${c._1} -> ${c._2} files"))
     }
-    def curve(name: String, r: Option[(Double, Double)]): Action =
-      Action(name, "lineitem", r.isDefined,
+    val curves = Seq(ZOrderLayout, HilbertLayout).map { l =>
+      val r = l.maintain(s, sfDir)
+      Action(l.name, "lineitem", r.isDefined,
         r.fold("held")(mf =>
           f"folded at metric ${mf._1 / 1e6}%.2f MB vs floor ${mf._2 / 1e6}%.2f MB"))
-    val z = curve("zorder", ZOrderLayout.maintain(s, sfDir))
-    val h = curve("hilbert", HilbertLayout.maintain(s, sfDir))
+    }
     val item = itemDir.toSeq.map { dir =>
       val r = graft.superstore.Exporter.maintainItemPartitioned(s, dir, itemCalendar)
       Action("item-partitioned", dir, r.isDefined,
         r.fold("held")(c => s"folded ${c._1} -> ${c._2} files"))
     }
-    bucketed ++ Seq(z, h) ++ item
+    bucketed ++ curves ++ item
+  }
+
+  /** Wall seconds of `f`, for the maintenance mains' JSONL lines. */
+  private[graft] def timed[T](f: => T): (T, Double) = {
+    val t0 = System.nanoTime(); val r = f
+    (r, (System.nanoTime() - t0) / 1e9)
+  }
+
+  /** Order-insensitive value fingerprint (rows, Σ pmod(xxhash64(every
+    * column, by name), 1e9)): fp(layout) == fp(source) IS "merged ≡
+    * rebuilt" for the maintenance mains. pmod keeps a 180 M-row sum far
+    * under Long.Max (ANSI mode would throw on a full-range xxhash64 sum). */
+  private[graft] def fingerprint(df: DataFrame): (Long, Long) = {
+    val h = df.select(pmod(xxhash64(df.columns.sorted.map(col).toSeq: _*),
+      lit(1000000000L)).as("h"))
+    val r = h.agg(count(lit(1)), sum(col("h"))).head
+    (r.getLong(0), r.getLong(1))
   }
 }

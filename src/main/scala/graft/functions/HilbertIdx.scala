@@ -8,7 +8,7 @@ import org.apache.spark.sql.types.{DataType, LongType}
 
 /** `hilbert_idx(bits, d0, d1, …)` — the Hilbert-curve index of a k-dim
   * point whose coordinates are already ranked to `bits` bits each
-  * (graft.sources.HilbertLayout does the ranking). Layout-only, like
+  * (graft.sources.ClusteredLayout does the ranking). Layout-only, like
   * ZOrderLayout's z-value: it orders rows at write time and is dropped
   * before the write, so no query result depends on it — but it still gets
   * the native-expression treatment (eval + doGenCode + spec-pinned

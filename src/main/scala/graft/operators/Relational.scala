@@ -305,7 +305,7 @@ object Relational {
     java.time.LocalDate.of(1997, 1, 1).toEpochDay * 86400L * 1000000L
 
   val q74_zorder_slice: Q = (s, d) => {
-    val loc = graft.sources.ZOrderLayout.ensureLineitem(s, d)
+    val loc = graft.sources.ZOrderLayout.ensure(s, d)
     // same bound the oracle derives with MAX()//8 — exact integer division
     val maxPk = lineitem(s, d).agg(max(col("l_partkey"))).head().getLong(0)
     // manifest-pruned: the file-level must-read set comes from ONE
@@ -339,7 +339,7 @@ object Relational {
     * are layout-independent: the oracle runs the identical slice on the
     * PLAIN table — q73/q74's value-faithfulness pattern. */
   val q77_hilbert_slice: Q = (s, d) => {
-    val loc = graft.sources.HilbertLayout.ensureLineitem3(s, d)
+    val loc = graft.sources.HilbertLayout.ensure(s, d)
     // same bounds the oracle derives with MAX()//k — exact integer division
     val b = lineitem(s, d)
       .agg(max(col("l_partkey")), max(col("l_suppkey"))).head()

@@ -127,24 +127,8 @@ object BucketedLayout {
     * neither and is left alone. Deleting is always safe — the next
     * ensure rebuilds from source. Runs once per JVM, before the first
     * registration, so no live catalog entry can point at a vacuumed dir. */
-  @volatile private var vacuumed = false
-  private def vacuumLegacyOnce(): Unit = {
-    if (vacuumed) return
-    vacuumed = true
-    Option(new java.io.File(Root).listFiles).toSeq.flatten
-      .filter(_.isDirectory).foreach { hashDir =>
-        val tables = Option(hashDir.listFiles).toSeq.flatten.filter(_.isDirectory)
-        val legacy = tables.nonEmpty && tables.forall { t =>
-          new java.io.File(t, "_bkt_ok").isFile &&
-            !new java.io.File(t, "_bkt_meta").isFile
-        }
-        if (legacy) {
-          System.err.println(
-            s"[bucketed] vacuuming legacy-scheme layout dir ${hashDir.getPath}")
-          graft.Fs.deleteTree(hashDir.toPath)
-        }
-      }
-  }
+  private lazy val vacuumed: Int =
+    LayoutMeta.vacuumLegacy(Root, "_bkt_ok", "_bkt_meta")
 
   // ------------------------------------------------------------ ensure
 
@@ -167,7 +151,7 @@ object BucketedLayout {
     * ingests advance the stamp through [[appendDelta]] instead). */
   def ensureTable(s: SparkSession, sfDir: String, table: String,
                   key: String, buckets: Int = Buckets): String = synchronized {
-    vacuumLegacyOnce()
+    vacuumed
     val h = hash(s"$sfDir|$table|$key", buckets)
     val name = nameOf(table, h)
     val loc = locOf(h, table)

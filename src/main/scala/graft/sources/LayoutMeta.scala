@@ -2,8 +2,8 @@ package graft.sources
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-/** Shared `_layout_meta` handling for the clustered layouts (z-order,
-  * Hilbert) — the same source-stamp discipline BucketedLayout carries in
+/** `_layout_meta` handling for [[ClusteredLayout]] (z-order, Hilbert) —
+  * the same source-stamp discipline BucketedLayout carries in
   * `_bkt_meta`: a layout dir records the stamp of the source files it
   * reflects, ensure REBUILDS on mismatch (a changed source must never be
   * served a stale clustered copy — before round 13 these layouts were
@@ -75,7 +75,7 @@ private[graft] object LayoutMeta {
   /** The recluster policy's metric: point-probe bytes against the
     * RECORDED floor domains when the meta carries them, else the live
     * domains (pre-r16 layouts, until their next recluster). One helper so
-    * maintain()s, the ladder, and the specs all read the same quantity. */
+    * maintain(), the ladder, and the specs all read the same quantity. */
   def anchoredProbeBytes(loc: String, entries: Seq[StatsManifest.Entry],
                          cols: Seq[String]): Double = {
     val doms = floorDomains(loc)
@@ -84,18 +84,21 @@ private[graft] object LayoutMeta {
   }
 
   /** One-time vacuum of a layout family root: delete hash dirs whose
-    * build COMPLETED under a retired addressing scheme (the layout's
-    * completion `marker` present, meta absent) — BucketedLayout's
-    * vacuumLegacyOnce generalized. In-progress dirs (no marker) are left
-    * alone. Returns the number of dirs removed. */
-  def vacuumLegacy(root: String, marker: String): Int = {
+    * build COMPLETED under a retired addressing scheme (every table dir
+    * has the layout's completion `marker` but no `meta` file — the
+    * clustered layouts' `_layout_meta`, BucketedLayout's `_bkt_meta`).
+    * In-progress dirs (no marker) are left alone. Deleting is always
+    * safe — the next ensure rebuilds from source. Returns the number of
+    * dirs removed. */
+  def vacuumLegacy(root: String, marker: String,
+                   meta: String = FileName): Int = {
     var n = 0
     Option(new java.io.File(root).listFiles).toSeq.flatten
       .filter(_.isDirectory).foreach { hashDir =>
         val tables = Option(hashDir.listFiles).toSeq.flatten.filter(_.isDirectory)
         val legacy = tables.nonEmpty && tables.forall { t =>
           new java.io.File(t, marker).isFile &&
-            !new java.io.File(t, FileName).isFile
+            !new java.io.File(t, meta).isFile
         }
         if (legacy) {
           System.err.println(

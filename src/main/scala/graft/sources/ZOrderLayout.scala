@@ -1,43 +1,33 @@
 package graft.sources
 
-import java.nio.file.{Files, Paths}
-
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DateType, DoubleType, LongType}
 
-/** Z-order (Morton-curve) clustered layout — MULTI-column data skipping,
-  * the second physical-layout lever next to bucketing (BucketedLayout) and
-  * single-key clustering (Exporter.persistItemPartitioned).
+/** Z-order (Morton-curve) clustered lineitem copy — MULTI-column data
+  * skipping, the second physical-layout lever next to bucketing
+  * (BucketedLayout) and single-key clustering
+  * (Exporter.persistItemPartitioned).
   *
-  * A single-column sort gives tight parquet footer min/max stats on that
-  * column only: a predicate on any OTHER column sees full-range stats in
-  * every file and can never skip. Interleaving the bit-ranks of TWO
-  * columns into one sort key (the Morton/Z curve) makes each contiguous
-  * key range — hence each output file — cover a small axis-aligned
-  * rectangle of the (A, B) plane, so footer stats are selective on BOTH
-  * columns at once: a predicate on either dimension alone intersects
-  * O(√files) files instead of all of them. This is the standard
-  * lakehouse `OPTIMIZE ZORDER BY` lever, applied at plain-parquet level:
-  * no table format needed, the reader's ordinary footer-stats row-group
-  * skipping (and a cluster catalog's file-level stats pruning) consumes
-  * it as-is. At 100 TB the win is proportional: the same rewrite, file
-  * sizes held at the row-group-friendly target, and every
-  * rectangle-shaped slice query reads the O(√files) intersection instead
-  * of the corpus.
+  * Interleaving the bit-ranks of TWO columns into one sort key makes each
+  * output file cover a small axis-aligned rectangle of the (A, B) plane,
+  * so footer stats are selective on BOTH columns at once: a predicate on
+  * either dimension alone intersects O(√files) files instead of all of
+  * them. At 100 TB the win is proportional: the same rewrite, file sizes
+  * held at the row-group-friendly target, and every rectangle-shaped
+  * slice query reads the O(√files) intersection instead of the corpus.
   *
-  * The z-value is LAYOUT-ONLY: it orders rows and is dropped before the
-  * write, so no query result depends on its arithmetic (the 16-bit rank
-  * uses one double multiply; fine for placement, never for answers).
-  * Value-faithfulness of the layout is hash-pinned by q74's oracle, which
-  * runs the same slice aggregation against the PLAIN table in DuckDB.
+  * Clustered on (l_partkey, day(l_shipdate)) — the two independent slice
+  * dimensions of the part/time query family (q74). The lifecycle is
+  * [[ClusteredLayout]]'s; the `z1` seed is the algorithm tag.
   */
-object ZOrderLayout {
+object ZOrderLayout extends ClusteredLayout("zorder", "_z_ok", "z1") {
 
-  /** Algorithm tag, part of the content address: any change to the curve
-    * or the write shape must retire previously persisted dirs (the
-    * BuildTag lesson from the IVF index — NOTES_r11 §5). */
-  val Tag = "z1"
+  protected def dims: Seq[Column] =
+    Seq(col("l_partkey"), ClusteredLayout.dayOf(col("l_shipdate")))
+
+  /** Interleaved z-value: even bits carry A's rank, odd bits B's. */
+  protected def curveKey(s: SparkSession, ranks: Seq[Column]): Column =
+    spread16(ranks(0)).bitwiseOR(shiftleft(spread16(ranks(1)), 1))
 
   /** Spread the low 16 bits of a long column to the even bit positions
     * 0,2,…,30 — the classic Morton mask ladder, all codegen'd long ops. */
@@ -47,214 +37,5 @@ object ZOrderLayout {
         x.bitwiseOR(shiftleft(x, sh)).bitwiseAND(lit(mask))
       }
 
-  /** 16-bit rank of `c` within [lo, hi] (linear scale; the double
-    * intermediate is overflow-free for any long domain and affects row
-    * PLACEMENT only). Degenerate domains collapse to rank 0. */
-  private def rank16(c: Column, lo: Long, hi: Long): Column =
-    if (hi <= lo) lit(0L)
-    else ((c - lit(lo)).cast(DoubleType) * (65535.0 / (hi - lo).toDouble))
-      .cast(LongType)
-
-  /** Interleaved z-value of two long dimensions ranked over their
-    * [lo, hi] domains: even bits carry A's rank, odd bits B's. */
-  def zval(a: Column, aLo: Long, aHi: Long,
-           b: Column, bLo: Long, bHi: Long): Column =
-    spread16(rank16(a, aLo, aHi))
-      .bitwiseOR(shiftleft(spread16(rank16(b, bLo, bHi)), 1))
-
-  /** Write `df` z-clustered on the two (long-valued) dimension columns:
-    * one tiny bounds agg, range-partition by the z-value so each output
-    * file covers one contiguous z-range = one small rectangle of the
-    * (A, B) plane, sort within for tight row-group stats, drop the key.
-    * Timestamps are forced to stats-bearing standard TIMESTAMP_MICROS for
-    * this write (INT96 carries no footer min/max — the whole point of the
-    * layout is those stats). */
-  def writeZOrdered(df: DataFrame, dimA: Column, dimB: Column,
-                    out: String, files: Int): Unit = {
-    val bounds = df.agg(
-      min(dimA.cast(LongType)), max(dimA.cast(LongType)),
-      min(dimB.cast(LongType)), max(dimB.cast(LongType))).head()
-    val z = zval(dimA.cast(LongType), bounds.getLong(0), bounds.getLong(1),
-                 dimB.cast(LongType), bounds.getLong(2), bounds.getLong(3))
-    val conf = df.sparkSession.conf
-    val key = "spark.sql.parquet.outputTimestampType"
-    val prev = conf.get(key)
-    conf.set(key, "TIMESTAMP_MICROS")
-    try df.withColumn("__z", z)
-      .repartitionByRange(files, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
-      .write.mode("overwrite").parquet(out)
-    finally conf.set(key, prev)
-  }
-
-  /** Epoch-day rank dimension for a timestamp column (build-time only). */
-  def dayOf(c: Column): Column =
-    datediff(c.cast(DateType), lit("1970-01-01").cast(DateType)).cast(LongType)
-
-  /** Content address: source path + algorithm tag ONLY (round 13 — the
-    * pre-r13 seed also baked in the size-derived FILE COUNT, which made
-    * the address drift with source size: a grown source that crossed a
-    * file-count boundary silently orphaned the old dir, and one that
-    * did NOT cross was SERVED STALE. Identity is now the (source, algo)
-    * pair; size is a build-time choice recorded by the files themselves,
-    * and freshness is the `_layout_meta` source stamp). */
-  private def hash(sfDir: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$sfDir|$Tag".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(8)
-
-  private def locFor(sfDir: String) =
-    s"/root/repo/target/zorder/${hash(sfDir)}/lineitem"
-
-  @volatile private var vacuumed = false
-  private def vacuumLegacyOnce(): Unit = {
-    if (vacuumed) return
-    vacuumed = true
-    LayoutMeta.vacuumLegacy("/root/repo/target/zorder", "_z_ok")
-  }
-
-  /** Ensure the z-ordered lineitem copy for `sfDir` exists, clustered on
-    * (l_partkey, day(l_shipdate)) — the two independent slice dimensions
-    * of the part/time query family. File count is size-driven
-    * (`graft.zorder.targetBytes`, default 128 MB — row-group-friendly at
-    * deployment scale; the 16-file floor keeps the curve's rectangles
-    * real at test scale). Marker-cached AND stamp-checked: reused while
-    * the source stamp matches `_layout_meta`, REBUILT when it doesn't
-    * ([[appendDeltaLineitem]] is the incremental alternative that
-    * advances the stamp for O(delta) cost). */
-  def ensureLineitem(s: SparkSession, sfDir: String): String = synchronized {
-    vacuumLegacyOnce()
-    val targetBytes =
-      s.conf.get("graft.zorder.targetBytes", (128L << 20).toString).toLong
-    val files = math.max(16, math.ceil(
-      graft.Tables.tableBytes(sfDir, "lineitem").toDouble / targetBytes).toInt)
-    val loc = locFor(sfDir)
-    val marker = Paths.get(s"$loc/_z_ok")
-    val stamp = graft.Tables.pathStamp(s"$sfDir/lineitem.parquet")
-    if (Files.exists(marker) && LayoutMeta.stamp(loc).contains(stamp)) {
-      if (!Files.exists(Paths.get(s"$loc/${StatsManifest.FileName}")))
-        StatsManifest.write(s, loc, StatsCols) // pre-manifest backfill
-    } else {
-      val dir = Paths.get(loc)
-      if (Files.exists(dir)) graft.Fs.deleteTree(dir) // stale or partial
-      writeZOrdered(graft.Tables.lineitem(s, sfDir),
-        col("l_partkey"), dayOf(col("l_shipdate")), loc, files)
-      StatsManifest.write(s, loc, StatsCols)
-      // the freshly-clustered tightness IS the recluster policy's floor;
-      // the domains recorded WITH it anchor the live metric's denominator
-      // so outlier deltas can't shrink existing hull ratios (ADVICE r15)
-      val fresh = StatsManifest.read(loc)
-      val doms = fresh.fold(Map.empty[String, (Long, Long)])(
-        StatsManifest.domainsOf(_, StatsCols))
-      val floor = fresh.map(StatsManifest.pointProbeBytes(_, StatsCols, doms))
-      LayoutMeta.write(loc, sfDir, "lineitem", stamp, floor, doms)
-      Files.writeString(marker, "ok")
-    }
-    loc
-  }
-
-  /** O(delta) maintenance for the z-ordered copy: cluster the DELTA rows
-    * among themselves (own bounds — placement only) into
-    * row-count-proportional new files, move them in, refresh the stats
-    * manifest (the new files' hulls are true, so pruning stays correct —
-    * merely less tight than a full recluster), and advance the source
-    * stamp LAST (a crash before it leaves the stamp old → next ensure
-    * rebuilds; a crash between the file move and the manifest leaves a
-    * census mismatch → prunedScan falls back to the full scan, loudly —
-    * every crash point degrades to correct). Caller contract matches
-    * BucketedLayout.appendDelta: `delta` is exactly the rows added to
-    * the source since the recorded stamp. Periodic full recluster =
-    * [[recluster]]. */
-  def appendDeltaLineitem(s: SparkSession, sfDir: String,
-                          delta: org.apache.spark.sql.DataFrame): Unit =
-    synchronized {
-      val loc = locFor(sfDir)
-      require(Files.exists(Paths.get(s"$loc/_z_ok")),
-        s"appendDelta: no persisted z-order layout at $loc — ensure first")
-      // size delta files to the layout's own rows-per-file
-      val entries = StatsManifest.read(loc).getOrElse(Seq.empty)
-      val rowsPerFile = math.max(1L,
-        if (entries.isEmpty) Long.MaxValue
-        else entries.map(_.rows).sum / entries.size)
-      val deltaRows = delta.count()
-      val files = math.max(1, math.ceil(deltaRows.toDouble / rowsPerFile).toInt)
-      val tmp = s"$loc/.append_tmp"
-      graft.Fs.deleteTree(Paths.get(tmp))
-      writeZOrdered(delta, col("l_partkey"), dayOf(col("l_shipdate")),
-        tmp, files)
-      Option(new java.io.File(tmp).listFiles).toSeq.flatten
-        .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-        .foreach(f => Files.move(f.toPath, Paths.get(s"$loc/${f.getName}")))
-      graft.Fs.deleteTree(Paths.get(tmp))
-      StatsManifest.write(s, loc, StatsCols)
-      // row-conservation guard (round 14 — BucketedLayout.appendDelta's
-      // discipline applied curve-side): never advance the stamp over a
-      // layout that diverged from the source beyond the supplied delta.
-      // Both sides are metadata the append already paid for.
-      val layoutRows = StatsManifest.read(loc).map(_.map(_.rows).sum).getOrElse(-1L)
-      val sourceRows = graft.Tables.tableRows(s, sfDir, "lineitem")
-      if (layoutRows != sourceRows) {
-        System.err.println(
-          s"[zorder] appendDelta divergence: layout holds $layoutRows rows, " +
-          s"source holds $sourceRows — reclustering from source.")
-        recluster(s, sfDir)
-      } else
-        // stamp advance CARRIES the recorded recluster floor — appends
-        // bloat the live metric, never the baseline
-        LayoutMeta.write(loc, sfDir, "lineitem",
-          graft.Tables.pathStamp(s"$sfDir/lineitem.parquet"),
-          LayoutMeta.probeFloor(loc), LayoutMeta.floorDomains(loc))
-    }
-
-  /** Recluster POLICY (round 15, VERDICT r14 #2 — the exact symmetry of
-    * BucketedLayout.maintain): appendDelta keeps values correct but every
-    * delta batch is clustered only among itself, so its file hulls span
-    * ~the whole (partkey, day) plane and pruning tightness decays
-    * monotonically. The trigger is computable from the manifest alone:
-    * the point-probe expected must-read bytes
-    * ([[StatsManifest.pointProbeBytes]]) against the floor recorded at
-    * the last (re)cluster — recluster when metric > k·floor
-    * (`graft.cluster.maxProbeBloat`, default 3: ~two full-file
-    * equivalents of accumulated delta hull mass before a fold, the same
-    * few-ingest-days cadence as the bucketed family's 4-files bound).
-    * Pre-policy layouts (meta without a floor) get the CURRENT state
-    * recorded as baseline and fold on the next qualifying tick. Returns
-    * Some((metric, floor)) when a recluster ran, None otherwise. */
-  def maintain(s: SparkSession, sfDir: String): Option[(Double, Double)] =
-    synchronized {
-      val loc = locFor(sfDir)
-      StatsManifest.read(loc) match {
-        case None => None // no manifest → nothing to decide from
-        case Some(entries) =>
-          // metric against the domains recorded at the last (re)cluster
-          // (pre-r16 meta: live domains until the next recluster records
-          // one — ADVICE r15, see LayoutMeta.anchoredProbeBytes)
-          val metric = LayoutMeta.anchoredProbeBytes(loc, entries, StatsCols)
-          LayoutMeta.probeFloor(loc) match {
-            case None =>
-              LayoutMeta.write(loc, sfDir, "lineitem",
-                LayoutMeta.stamp(loc).getOrElse(0L), Some(metric),
-                StatsManifest.domainsOf(entries, StatsCols))
-              None
-            case Some(floor) =>
-              val k = s.conf.get("graft.cluster.maxProbeBloat", "3.0").toDouble
-              if (floor > 0 && metric > k * floor) {
-                recluster(s, sfDir)
-                Some((metric, floor))
-              } else None
-          }
-      }
-    }
-
-  /** Full recluster — the compaction analog: drop the copy and rebuild
-    * from the (current) source; delta files fold back into the curve. */
-  def recluster(s: SparkSession, sfDir: String): String = synchronized {
-    graft.Fs.deleteTree(Paths.get(locFor(sfDir)))
-    ensureLineitem(s, sfDir)
-  }
-
-  /** Manifest-tracked pruning columns: the two clustered dimensions — the
-    * only columns whose file hulls the layout makes tight. */
   val StatsCols: Seq[String] = Seq("l_partkey", "l_shipdate")
 }

@@ -155,6 +155,22 @@ class BucketedIncrementSpec extends AnyFunSuite {
     assert(allRows(layoutDf(name)) == expect)
   }
 
+  test("legacy vacuum removes only completed dirs that lack the family's meta") {
+    val vroot = s"$root/vacuum"
+    graft.Fs.deleteTree(Paths.get(vroot))
+    def tableDir(hash: String, files: String*): Unit = {
+      val t = Paths.get(s"$vroot/$hash/lineitem")
+      Files.createDirectories(t)
+      files.foreach(f => Files.writeString(t.resolve(f), "ok"))
+    }
+    tableDir("retired", "_bkt_ok")                 // completed, no meta
+    tableDir("current", "_bkt_ok", "_bkt_meta")
+    tableDir("building")                           // no marker yet
+    tableDir("othermeta", "_bkt_ok", "_layout_meta") // not this family's meta
+    assert(graft.sources.LayoutMeta.vacuumLegacy(vroot, "_bkt_ok", "_bkt_meta") == 2)
+    assert(new java.io.File(vroot).list().toSet == Set("current", "building"))
+  }
+
   test("appendDelta refuses a missing layout") {
     val src = freshSource("missing", base)
     val e = intercept[IllegalArgumentException] {

@@ -85,7 +85,7 @@ class HilbertLayoutSpec extends AnyFunSuite {
     ranges.count { case (lo, hi) => lo <= probe && probe <= hi }
 
   test("hilbert copy is value-faithful to the source table") {
-    val loc = HilbertLayout.ensureLineitem3(spark, sf)
+    val loc = HilbertLayout.ensure(spark, sf)
     val h = spark.read.parquet(loc)
     val plain = Tables.lineitem(spark, sf)
     assert(h.count() == plain.count())
@@ -99,13 +99,10 @@ class HilbertLayoutSpec extends AnyFunSuite {
     // of them (16/64), so the strict-minority assertions have headroom
     val nFiles = 64
     val hDir = java.nio.file.Files.createTempDirectory("graft_hil").toString + "/li"
-    HilbertLayout.writeHilbert(li,
-      Seq(col("l_partkey"), ZOrderLayout.dayOf(col("l_shipdate")),
-          col("l_suppkey")), hDir, nFiles)
+    HilbertLayout.write(li, hDir, nFiles)
     // the comparison twin: the existing 2-dim z-order at the same file count
     val zDir = java.nio.file.Files.createTempDirectory("graft_hil_z").toString + "/li"
-    ZOrderLayout.writeZOrdered(li, col("l_partkey"),
-      ZOrderLayout.dayOf(col("l_shipdate")), zDir, nFiles)
+    ZOrderLayout.write(li, zDir, nFiles)
 
     assert(files(hDir).size > 8, "too few files for a pruning audit")
     val bounds = li.agg(min("l_partkey"), max("l_partkey"),
@@ -129,6 +126,27 @@ class HilbertLayoutSpec extends AnyFunSuite {
     val zSk = fileRanges(zDir, "l_suppkey")
     assert(hits(zSk, skProbe) > zSk.size * 3 / 4,
       s"z-2d twin unexpectedly selective on suppkey: ${hits(zSk, skProbe)}/${zSk.size}")
+  }
+
+  test("concurrent z-order and hilbert writes on one session keep its timestamp type") {
+    // the MICROS swap is session-wide: both layouts must take one lock, or
+    // the later writer restores MICROS (leaked) or writes INT96 (no stats)
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val key = "spark.sql.parquet.outputTimestampType"
+    val prior = spark.conf.get(key)
+    val li = Tables.lineitem(spark, sf)
+    val base = java.nio.file.Files.createTempDirectory("graft_race").toString
+    val go = new java.util.concurrent.CountDownLatch(1)
+    val layouts = Seq(ZOrderLayout, HilbertLayout)
+    val writes = layouts.map(l =>
+      Future { go.await(); l.write(li, s"$base/${l.name}", 16) })
+    go.countDown()
+    writes.foreach(Await.result(_, 5.minutes))
+    assert(spark.conf.get(key) == prior, "the timestamp type leaked")
+    // fileRanges asserts every file's footer carries l_shipdate min/max
+    layouts.foreach(l => assert(fileRanges(s"$base/${l.name}", "l_shipdate").nonEmpty))
   }
 
   test("q77 pushes all three slice predicates and matches the plain-table result") {

@@ -39,8 +39,8 @@ class MaintenanceSpec extends AnyFunSuite {
     Tables.clearCaches()
     // present families: one bucketed pair + both curves + the Item tree
     BucketedLayout.ensureTable(spark, src, "lineitem", "l_orderkey")
-    ZOrderLayout.ensureLineitem(spark, src)
-    HilbertLayout.ensureLineitem3(spark, src)
+    ZOrderLayout.ensure(spark, src)
+    HilbertLayout.ensure(spark, src)
     val csv = WarehouseCache.CsvPath
     val wh = SuperstoreETL.build(spark, csv)
     val (item, cal) = (wh("Item"), wh("Calendar"))
@@ -53,8 +53,8 @@ class MaintenanceSpec extends AnyFunSuite {
     Tables.clearCaches()
     val fresh = Tables.lineitem(spark, src).filter(col("l_orderkey") % 10 === 0)
     BucketedLayout.appendDelta(spark, src, "lineitem", "l_orderkey", delta)
-    ZOrderLayout.appendDeltaLineitem(spark, src, delta)
-    HilbertLayout.appendDeltaLineitem3(spark, src, delta)
+    ZOrderLayout.appendDelta(spark, src, delta)
+    HilbertLayout.appendDelta(spark, src, delta)
     val _ = fresh
     val itemDelta = item.filter(col("calendar_id") % 10 === 0)
     Exporter.appendItemPartitioned(item, itemDelta, cal, itemDir,
@@ -80,7 +80,7 @@ class MaintenanceSpec extends AnyFunSuite {
       // value fidelity through the composed tick (spot check the curves)
       def key(r: org.apache.spark.sql.Row) = r.mkString("|")
       val expect = base.union(delta).collect().map(key).sorted.toSeq
-      val gotZ = spark.read.parquet(ZOrderLayout.ensureLineitem(spark, src))
+      val gotZ = spark.read.parquet(ZOrderLayout.ensure(spark, src))
         .collect().map(key).sorted.toSeq
       assert(gotZ == expect)
       val entries = StatsManifest.read(s"$itemDir/Item_by_year")

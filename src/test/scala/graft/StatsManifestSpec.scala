@@ -54,7 +54,7 @@ class StatsManifestSpec extends AnyFunSuite {
     java.time.LocalDate.of(1997, 1, 1).toEpochDay * 86400L * 1000000L
 
   test("manifest hulls are bit-identical to the parquet footers (zorder)") {
-    val loc = ZOrderLayout.ensureLineitem(spark, sf)
+    val loc = ZOrderLayout.ensure(spark, sf)
     val entries = StatsManifest.read(loc)
       .getOrElse(fail("manifest missing after build"))
     for (c <- ZOrderLayout.StatsCols) {
@@ -68,8 +68,8 @@ class StatsManifestSpec extends AnyFunSuite {
   }
 
   test("manifest must-read set == direct footer prune (q74 and q77 boxes)") {
-    val zloc = ZOrderLayout.ensureLineitem(spark, sf)
-    val hloc = HilbertLayout.ensureLineitem3(spark, sf)
+    val zloc = ZOrderLayout.ensure(spark, sf)
+    val hloc = HilbertLayout.ensure(spark, sf)
     val li = Tables.lineitem(spark, sf)
     val b = li.agg(max(col("l_partkey")), max(col("l_suppkey"))).head()
     val (maxPk, maxSk) = (b.getLong(0), b.getLong(1))
@@ -100,7 +100,7 @@ class StatsManifestSpec extends AnyFunSuite {
   }
 
   test("pruned scan reads only the must-read files and returns the full-scan rows") {
-    val loc = ZOrderLayout.ensureLineitem(spark, sf)
+    val loc = ZOrderLayout.ensure(spark, sf)
     val li = Tables.lineitem(spark, sf)
     val maxPk = li.agg(max(col("l_partkey"))).head().getLong(0)
     val preds = Seq(
@@ -122,7 +122,7 @@ class StatsManifestSpec extends AnyFunSuite {
   }
 
   test("census mismatch degrades to the unpruned fallback, never to row loss") {
-    val loc = ZOrderLayout.ensureLineitem(spark, sf)
+    val loc = ZOrderLayout.ensure(spark, sf)
     val mPath = Paths.get(s"$loc/${StatsManifest.FileName}")
     val original = Files.readString(mPath)
     try {
