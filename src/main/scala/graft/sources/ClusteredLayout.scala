@@ -44,7 +44,7 @@ abstract class ClusteredLayout(val name: String, marker: String,
     * only columns whose file hulls the layout makes tight. */
   val StatsCols: Seq[String]
 
-  private val root = s"/root/repo/target/$name"
+  private val root = new java.io.File("target", name).getAbsolutePath
 
   /** Write `df` clustered on [[dims]]: one tiny bounds agg, rank each dim,
     * range-partition by the curve key so each output file covers one
