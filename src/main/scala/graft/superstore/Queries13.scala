@@ -1,6 +1,6 @@
 package graft.superstore
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
@@ -10,25 +10,41 @@ import org.apache.spark.sql.types._
   * (the engine's native surface) and a Spark SQL text twin (registered
   * views) — Queries13Spec asserts the two formulations agree row-for-row.
   *
-  * MySQL-isms are rewritten per SURVEY.md §2: IF(GROUPING()) →
-  * when(grouping()), GROUP_CONCAT becomes a sorted
-  * collect_list join (SUBSTRING_INDEX itself is a Spark built-in and is
-  * applied with MySQL's exact separator-counting semantics — see q13),
-  * DATEDIFF(a,b) → datediff(a,b). Where the reference's window order
-  * is ambiguous under ties (ORDER BY i.sales DESC), a product_name
+  * MySQL-isms are rewritten per SURVEY.md §2: IF(GROUPING()) → CASE WHEN
+  * GROUPING() (the q4 DataFrame counts each order under TOTAL instead),
+  * GROUP_CONCAT becomes a sorted collect_list join (SUBSTRING_INDEX is a
+  * Spark built-in, applied with MySQL's exact separator-counting semantics
+  * — see q13), DATEDIFF(a,b) → datediff(a,b). Where the reference's window
+  * order is ambiguous under ties (ORDER BY i.sales DESC), a product_name
   * tiebreaker pins determinism — MySQL's tie order is arbitrary anyway.
   *
   * Q1 preserves the reference's join bug (order_calendar_id joined to
   * calendar_month_id — a day-grain FK against a month-grain PK,
   * DA:cell 2; SURVEY.md §7.3.5) for result parity.
+  *
+  * Each DataFrame program runs as its broadcasts plus one shuffle-free
+  * stage: [[fact]] reads the fact as one partition, and the State, Region
+  * and Category names come flattened from Location and Product. The SQL
+  * twins and [[duckOracles]] keep the reference's join chains, so every
+  * DF==SQL and oracle check also checks the flattening.
   */
 object Queries13 {
   type WQ = Map[String, DataFrame] => DataFrame
 
+  /** Fact `t` as one partition, meeting the distribution of any aggregate,
+    * window or ORDER BY above it. The Superstore tables read here are one
+    * parquet file each ([[WarehouseCache.write]], the benchmark), so the
+    * scan was one task already, over ~10k rows: broadcast-sized data. */
+  private def fact(wh: Map[String, DataFrame], t: String): DataFrame = wh(t).coalesce(1)
+
+  /** Item with the Product columns `cols`, joined on product_id. */
+  private def items(wh: Map[String, DataFrame], cols: String*): DataFrame =
+    fact(wh, "Item").join(broadcast(wh("Product").select("product_id", cols: _*)), "product_id")
+
   /** q1 — monthly sales trend (DA:cell 2), including the reference's
     * FK-grain join bug, preserved deliberately. */
   val q1_monthly_sales: WQ = wh =>
-    wh("Orders").join(wh("CalendarMonth"),
+    fact(wh, "Orders").join(broadcast(wh("CalendarMonth")),
         col("order_calendar_id") === col("calendar_month_id"))
       .groupBy(col("year_number").as("year"),
                col("calendar_month_number").as("month_num"),
@@ -38,37 +54,34 @@ object Queries13 {
 
   /** q2 — profit by region via the Location→State→Region chain (cell 4). */
   val q2_region_profit: WQ = wh =>
-    wh("Orders")
-      .join(broadcast(wh("Location").select("location_id", "state_id")), "location_id")
-      .join(broadcast(wh("State").select(col("state_id"), col("region_id"))), "state_id")
-      .join(broadcast(wh("Region").select(col("region_id"), col("region_name"))), "region_id")
+    fact(wh, "Orders")
+      .join(broadcast(wh("Location").select("location_id", "region_name")), "location_id")
       .groupBy(col("region_name").as("region"))
       .agg(sum("profit_order").as("total_profit"))
       .orderBy(desc("total_profit"))
 
   /** q3 — top-10 products by quantity (cell 6). */
   val q3_top_products_qty: WQ = wh =>
-    wh("Item")
-      .join(broadcast(wh("Product").select("product_id", "product_name")), "product_id")
+    items(wh, "product_name")
       .groupBy("product_name")
       .agg(sum("quantity").as("total_quantity"))
       .orderBy(desc("total_quantity"), col("product_name"))
       .limit(10)
 
-  /** q4 — sales by segment WITH ROLLUP + GROUPING relabel (cell 8). */
+  /** q4 — sales by segment WITH ROLLUP (cell 8): each order counts under its
+    * segment and under TOTAL, since `rollup()` plans an Expand whose output
+    * has no partitioning, so its final aggregate would shuffle. */
   val q4_segment_rollup: WQ = wh =>
-    wh("Orders")
+    fact(wh, "Orders")
       .join(broadcast(wh("Customer").select("customer_id", "segment")), "customer_id")
-      .rollup(col("segment"))
-      .agg(sum("sales_order").as("total_sales"), grouping(col("segment")).as("g"))
-      .select(when(col("g") === 1, lit("TOTAL")).otherwise(col("segment")).as("segment"),
-              col("total_sales"))
+      .select(explode(array(col("segment"), lit("TOTAL"))).as("segment"), col("sales_order"))
+      .groupBy("segment")
+      .agg(sum("sales_order").as("total_sales"))
       .orderBy("segment")
 
   /** q5 — rank products by profit, top 10 (cell 10). */
   val q5_profit_rank: WQ = wh =>
-    wh("Item")
-      .join(broadcast(wh("Product").select("product_id", "product_name")), "product_id")
+    items(wh, "product_name")
       .groupBy("product_name")
       .agg(sum("profit").as("total_profit"))
       .withColumn("ranking", rank().over(Window.orderBy(desc("total_profit"))))
@@ -78,9 +91,8 @@ object Queries13 {
   /** q6 — running sales per state over order dates, default RANGE frame
     * (cell 12): same-date orders tie together. */
   val q6_running_state_sales: WQ = wh =>
-    wh("Orders")
-      .join(broadcast(wh("Location").select("location_id", "state_id")), "location_id")
-      .join(broadcast(wh("State").select("state_id", "state_name")), "state_id")
+    fact(wh, "Orders")
+      .join(broadcast(wh("Location").select("location_id", "state_name")), "location_id")
       .join(broadcast(wh("Calendar").select(col("calendar_id"), col("full_date"))),
             col("order_calendar_id") === col("calendar_id"))
       .select(col("state_name"), col("full_date"), col("sales_order"), col("order_code"))
@@ -91,10 +103,9 @@ object Queries13 {
   /** q7 — average delivery time per ship mode via the two role-playing
     * Calendar joins (cell 14), both projected from one read of Calendar. */
   val q7_delivery_time: WQ = wh => {
-    val cal = wh("Calendar")
-    val c1 = cal.select(col("calendar_id").as("oc_id"), col("full_date").as("od"))
-    val c2 = cal.select(col("calendar_id").as("sc_id"), col("full_date").as("sd"))
-    wh("Orders")
+    val c1 = wh("Calendar").select(col("calendar_id").as("oc_id"), col("full_date").as("od"))
+    val c2 = wh("Calendar").select(col("calendar_id").as("sc_id"), col("full_date").as("sd"))
+    fact(wh, "Orders")
       .join(broadcast(wh("Shipping")), "shipping_id")
       .join(broadcast(c1), col("order_calendar_id") === col("oc_id"))
       .join(broadcast(c2), col("shipping_calendar_id") === col("sc_id"))
@@ -105,7 +116,7 @@ object Queries13 {
 
   /** q8 — lost value per ship mode (cell 16). */
   val q8_lost_value: WQ = wh =>
-    wh("Orders")
+    fact(wh, "Orders")
       .join(broadcast(wh("Shipping")), "shipping_id")
       .groupBy("ship_mode")
       .agg(round(sum("lost_value_order"), 2).as("lost_value"))
@@ -119,9 +130,7 @@ object Queries13 {
     * floor/+/÷) is bit-identical across engines — the same portability
     * discipline as q18/q28 in graft.operators. */
   val q9_category_stats: WQ = wh =>
-    wh("Item")
-      .join(broadcast(wh("Product").select("product_id", "category_id")), "product_id")
-      .join(broadcast(wh("Category")), "category_id")
+    items(wh, "category_name")
       .groupBy("category_name")
       .agg(sum("sales").as("total_sales"), sum("profit").as("total_profit"),
            (floor(sum((col("discount") * 100).cast(LongType)).cast(DoubleType) /
@@ -130,28 +139,24 @@ object Queries13 {
 
   /** q10 — cumulative % of sales by state: window-over-aggregate + scalar
     * subquery total (cell 20). */
-  val q10_cumulative_pct: WQ = wh => {
-    val byState = wh("Orders")
-      .join(broadcast(wh("Location").select("location_id", "state_id")), "location_id")
-      .join(broadcast(wh("State").select("state_id", "state_name")), "state_id")
+  val q10_cumulative_pct: WQ = wh =>
+    fact(wh, "Orders")
+      .join(broadcast(wh("Location").select("location_id", "state_name")), "location_id")
       .groupBy("state_name")
       .agg(sum("sales_order").as("total_sales"))
-    byState
       .withColumn("accumulated_sales",
         sum("total_sales").over(Window.orderBy("state_name")))
       .withColumn("grand_total", sum("total_sales").over(Window.partitionBy()))
-      // pct rounded via the engine-portable double snap (cf. q9's note):
-      // one double division + fixed op order, floor(x*100+0.5)/100
+      // pct via q9's engine-portable double snap: floor(x*100+0.5)/100
       .select(col("state_name"), col("total_sales"), col("accumulated_sales"),
               (floor(col("accumulated_sales").cast(DoubleType) /
                      col("grand_total").cast(DoubleType) * 100 * 100 + 0.5) / 100)
                 .as("cumulative_percentage"))
       .orderBy("cumulative_percentage")
-  }
 
   /** q11 — monthly state detail from the OrderM aggregate fact (cell 22). */
   val q11_orderm_detail: WQ = wh =>
-    wh("OrderM")
+    fact(wh, "OrderM")
       .join(broadcast(wh("CalendarMonth")), "calendar_month_id")
       .join(broadcast(wh("State").select("state_id", "state_name")), "state_id")
       .select("state_name", "year_number", "calendar_month_number",
@@ -162,17 +167,13 @@ object Queries13 {
   /** q12 — Pareto: products forming 80% of category sales (cell 24);
     * product_name tiebreaks the reference's ambiguous sales-DESC order. */
   val q12_pareto: WQ = wh => {
-    val base = wh("Item")
-      .join(broadcast(wh("Product").select("product_id", "product_name", "category_id")), "product_id")
-      .join(broadcast(wh("Category")), "category_id")
-      .select("category_name", "product_name", "sales")
     val wRun = Window.partitionBy("category_name")
       .orderBy(desc("sales"), col("product_name"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wTot = Window.partitionBy("category_name")
-    base
+    items(wh, "product_name", "category_name")
+      .select("category_name", "product_name", "sales")
       .withColumn("running_sales", sum("sales").over(wRun))
-      .withColumn("total_category_sales", sum("sales").over(wTot))
+      .withColumn("total_category_sales", sum("sales").over(Window.partitionBy("category_name")))
       .filter(col("running_sales") - col("sales") < col("total_category_sales") * 0.8)
       .orderBy(col("category_name"), desc("running_sales"), col("product_name"))
       .limit(10)
@@ -185,9 +186,7 @@ object Queries13 {
     * ordered concat is built first and substring_index cuts it — not a
     * clean top-10-names slice. */
   val q13_top_concat: WQ = wh =>
-    wh("Item")
-      .join(broadcast(wh("Product").select("product_id", "product_name", "category_id")), "product_id")
-      .join(broadcast(wh("Category")), "category_id")
+    items(wh, "product_name", "category_name")
       .groupBy("category_name")
       .agg(
         expr("""substring_index(array_join(transform(

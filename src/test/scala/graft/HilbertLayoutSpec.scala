@@ -98,10 +98,10 @@ class HilbertLayoutSpec extends AnyFunSuite {
     // 64 files: a one-axis slab of a 3-dim curve intersects ~files^(2/3)
     // of them (16/64), so the strict-minority assertions have headroom
     val nFiles = 64
-    val hDir = java.nio.file.Files.createTempDirectory("graft_hil").toString + "/li"
+    val hDir = TestSpark.tempDir("graft_hil") + "/li"
     HilbertLayout.write(li, hDir, nFiles)
     // the comparison twin: the existing 2-dim z-order at the same file count
-    val zDir = java.nio.file.Files.createTempDirectory("graft_hil_z").toString + "/li"
+    val zDir = TestSpark.tempDir("graft_hil_z") + "/li"
     ZOrderLayout.write(li, zDir, nFiles)
 
     assert(files(hDir).size > 8, "too few files for a pruning audit")
@@ -137,7 +137,7 @@ class HilbertLayoutSpec extends AnyFunSuite {
     val key = "spark.sql.parquet.outputTimestampType"
     val prior = spark.conf.get(key)
     val li = Tables.lineitem(spark, sf)
-    val base = java.nio.file.Files.createTempDirectory("graft_race").toString
+    val base = TestSpark.tempDir("graft_race")
     val go = new java.util.concurrent.CountDownLatch(1)
     val layouts = Seq(ZOrderLayout, HilbertLayout)
     val writes = layouts.map(l =>

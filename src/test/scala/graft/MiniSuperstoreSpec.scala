@@ -113,4 +113,20 @@ class MiniSuperstoreSpec extends AnyFunSuite {
       .select("product_id").collect().map(_.getInt(0)).toSeq
     assert(ids.sorted == Seq(5, 5))
   }
+
+  test("Location and Product carry the names their snowflake chains reach") {
+    val location = wh("Location")
+    val viaState = location.select("location_id", "state_id")
+      .join(wh("State").select("state_id", "state_name", "region_id"), "state_id")
+      .join(wh("Region").select("region_id", "region_name"), "region_id")
+    val flat = strings(location, "location_id", "state_name", "region_name")
+    assert(flat.size == 3)
+    assert(flat == strings(viaState, "location_id", "state_name", "region_name"))
+    val product = wh("Product")
+    val viaCategory = product.select("product_id", "category_id")
+      .join(wh("Category").select("category_id", "category_name"), "category_id")
+    val flatCat = strings(product, "product_id", "category_name")
+    assert(flatCat.size == 5)
+    assert(flatCat == strings(viaCategory, "product_id", "category_name"))
+  }
 }

@@ -15,15 +15,6 @@ import graft.sources.SnapshotMerge
 class SnapshotMergeSpec extends AnyFunSuite {
   import TestSpark.{spark, sf}
 
-  private def deleteTree(p: java.nio.file.Path): Unit =
-    if (Files.exists(p)) {
-      if (Files.isDirectory(p)) {
-        val l = Files.list(p)
-        try l.forEach(deleteTree) finally l.close()
-      }
-      Files.deleteIfExists(p)
-    }
-
   /** (name, size, mtime) of every data file under each part dir. */
   private def partFiles(dir: String): Map[String, Seq[(String, Long, Long)]] =
     Option(new java.io.File(dir).listFiles).toSeq.flatten
@@ -52,7 +43,7 @@ class SnapshotMergeSpec extends AnyFunSuite {
     SnapshotMerge.liveDocs(spark, dir).select("doc_id", "text")
 
   test("apply lands the full-recompute end state, touching only delta partitions") {
-    val dir = Files.createTempDirectory("graft_merge").toString + "/snap"
+    val dir = TestSpark.tempDir("graft_merge") + "/snap"
     SnapshotMerge.writeBase(spark, sf, dir)
     val delta = SnapshotMerge.delta(spark, sf)
     val deltaParts = delta.select("part").distinct()
@@ -86,7 +77,7 @@ class SnapshotMergeSpec extends AnyFunSuite {
   }
 
   test("deletes persist tombstones; vacuum reclaims them only past the horizon") {
-    val dir = Files.createTempDirectory("graft_merge_vac").toString + "/snap"
+    val dir = TestSpark.tempDir("graft_merge_vac") + "/snap"
     SnapshotMerge.writeBase(spark, sf, dir)
     val delta = SnapshotMerge.delta(spark, sf)
     val nDeletes = delta.filter(col("op") === "delete").count()
@@ -111,7 +102,7 @@ class SnapshotMergeSpec extends AnyFunSuite {
   }
 
   test("a manifested crashed swap is healed forward by a plain read") {
-    val dir = Files.createTempDirectory("graft_merge_crash").toString + "/snap"
+    val dir = TestSpark.tempDir("graft_merge_crash") + "/snap"
     SnapshotMerge.writeBase(spark, sf, dir)
     val ledgerBefore = SnapshotMerge.mergedLedger(spark, dir).collect().toSeq
 
@@ -126,7 +117,7 @@ class SnapshotMergeSpec extends AnyFunSuite {
       .select("doc_id", "text", "seq", "tomb", "part")
       .coalesce(1).write.partitionBy("part").parquet(tmp)
     Files.writeString(Paths.get(s"$tmp/.merge_manifest"), s"$p:keep\n$q:drop")
-    deleteTree(Paths.get(s"$dir/part=$p")) // worst case: only copy is the temp
+    graft.Fs.deleteTree(Paths.get(s"$dir/part=$p")) // worst case: only copy is the temp
 
     // NO apply call: the plain reader heals — p restored from the temp,
     // q dropped, temp consumed
@@ -139,7 +130,7 @@ class SnapshotMergeSpec extends AnyFunSuite {
   }
 
   test("readers leave an unmanifested temp alone (live writer's work)") {
-    val dir = Files.createTempDirectory("graft_merge_live").toString + "/snap"
+    val dir = TestSpark.tempDir("graft_merge_live") + "/snap"
     SnapshotMerge.writeBase(spark, sf, dir)
     val before = SnapshotMerge.mergedLedger(spark, dir).collect().toSeq
     val tmp = s"$dir.merge_tmp"

@@ -13,8 +13,7 @@ import graft.streaming.{BandIngest, DocsFunnel, EventsStream, StateCompaction, V
 class StateCompactionSpec extends AnyFunSuite {
   import TestSpark.{spark, sf}
 
-  private def tmp(prefix: String) =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+  private def tmp(prefix: String) = TestSpark.tempDir(prefix)
 
   test("vec delta: latest-wins survives compaction; one bid dir remains") {
     val idx = IvfIndex.ensure(spark, sf)
@@ -70,7 +69,7 @@ class StateCompactionSpec extends AnyFunSuite {
     val deliveryDir = tmp("funnel_compact_in")
     val stateDir = tmp("funnel_compact_state")
     def deliver(df: DataFrame, name: String): Unit = {
-      val staging = java.nio.file.Files.createTempDirectory("sc_staging")
+      val staging = java.nio.file.Paths.get(tmp("sc_staging"))
       df.coalesce(1).write.mode("overwrite").parquet(staging.toString)
       val part = java.nio.file.Files.list(staging).toArray.map(_.toString)
         .filter(_.endsWith(".parquet")).head
@@ -92,14 +91,6 @@ class StateCompactionSpec extends AnyFunSuite {
     assert(ledgerSet == before)
     assert(StateCompaction.committedKeyedDirs(s"$stateDir/parts", "batch_id").size == 1)
     assert(StateCompaction.committedKeyedDirs(s"$stateDir/p4", "batch_id").size == 1)
-  }
-
-  private def deleteTree(p: java.nio.file.Path): Unit = {
-    if (java.nio.file.Files.isDirectory(p)) {
-      val l = java.nio.file.Files.list(p)
-      try l.forEach(deleteTree) finally l.close()
-    }
-    java.nio.file.Files.deleteIfExists(p)
   }
 
   test("keyed swap recovery: a manifested temp finishes forward, losslessly") {
@@ -124,7 +115,7 @@ class StateCompactionSpec extends AnyFunSuite {
       .select("doc_id", "band_key").distinct().write.parquet(tmpDir)
     Files.writeString(Paths.get(s"$tmpDir/.consumed"),
       ("bid=1" +: dirs).mkString("\n"))
-    deleteTree(Paths.get(dirs.head)) // bid=0 gone
+    graft.Fs.deleteTree(Paths.get(dirs.head)) // bid=0 gone
 
     // the naive recovery (discard temp, re-compact remainder) would lose
     // bid=0's rows here; the manifested recovery must finish the swap
@@ -157,7 +148,7 @@ class StateCompactionSpec extends AnyFunSuite {
       .select("doc_id", "band_key").distinct().write.parquet(tmpDir)
     Files.writeString(Paths.get(s"$tmpDir/.consumed"),
       ("bid=1" +: dirs).mkString("\n"))
-    deleteTree(Paths.get(dirs.head))
+    graft.Fs.deleteTree(Paths.get(dirs.head))
 
     // NO compaction call: the plain read path must heal and serve the
     // complete set (a compaction crash needs no operator intervention)
@@ -236,7 +227,7 @@ class StateCompactionSpec extends AnyFunSuite {
     // crash state C: live dir missing, replacement fully written → finish
     val latest = spark.read.parquet(s"$outDir/hourly_partials")
     latest.coalesce(1).write.parquet(s"$outDir/.hourly_partials_tmp")
-    deleteTree(Paths.get(s"$outDir/hourly_partials"))
+    graft.Fs.deleteTree(Paths.get(s"$outDir/hourly_partials"))
     StateCompaction.recoverHourlyPartials(outDir)
     assert(merged == before)
     // and the real compaction still works end-to-end after all that

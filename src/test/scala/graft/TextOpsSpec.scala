@@ -132,7 +132,7 @@ class TextOpsSpec extends AnyFunSuite {
       "a completely different document about spark catalyst and tungsten too",
       "unrelated text with its own vocabulary entirely separate from others")
     def writeCorpus(offset: Long): String = {
-      val dir = java.nio.file.Files.createTempDirectory("graft_ids").toString
+      val dir = TestSpark.tempDir("graft_ids")
       base.zipWithIndex
         .map { case (t, i) => (offset + i, "en", t, t.length.toLong) }
         .toDF("doc_id", "lang", "text", "n_chars")

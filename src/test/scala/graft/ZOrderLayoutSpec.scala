@@ -56,10 +56,10 @@ class ZOrderLayoutSpec extends AnyFunSuite {
   test("footer stats prune on BOTH dimensions; the single-sort twin on one") {
     val li = Tables.lineitem(spark, sf)
     val nFiles = 16
-    val zDir = java.nio.file.Files.createTempDirectory("graft_zord").toString + "/li"
+    val zDir = TestSpark.tempDir("graft_zord") + "/li"
     ZOrderLayout.write(li, zDir, nFiles)
     // the comparison twin: same file count, clustered on ship date ONLY
-    val sDir = java.nio.file.Files.createTempDirectory("graft_sort").toString + "/li"
+    val sDir = TestSpark.tempDir("graft_sort") + "/li"
     val conf = spark.conf
     val tsKey = "spark.sql.parquet.outputTimestampType"
     val prevTs = conf.get(tsKey)
